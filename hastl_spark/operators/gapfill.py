@@ -166,21 +166,27 @@ def stl_gapfill(
 
 
 def _grouped_map_partitions(df: DataFrame, n_keys: int | None = None) -> int:
-    """Partition count for grouped-map stages: cores x 2 with a FLOOR well
-    above the group-key count. With few distinct keys (e.g. 64 sources) and
-    partitions ~ cores, hash collisions put 3-4x more keys in some
-    partitions than others and the stage wall is that straggler — measured
-    as THE scaling-efficiency killer (gap-fill 0.55, chunk encode 0.34 at
-    2->8 cores). Partitions >= 4x keys dilute collisions to ~one key per
-    partition, so the stage load-balances at any core count.
+    """Partition count of a grouped-map stage's hash exchange.
 
-    When the caller knows the key cardinality (``n_keys``), the floor is
-    4x that — a 5-key query then schedules ~64 tasks, not 256 (at toy
-    scale the fixed ~5-10ms/task of 200 empty grouped-map tasks is a
-    visible constant). Unknown cardinality keeps the conservative 256."""
+    Known group count ``g`` (``n_keys``): ``max(1, min(4g, 2 x cores))``.
+    4g dilutes hash collisions to about one group per task wherever that
+    fits in two waves of tasks; beyond two waves, every extra task is an
+    empty Python-worker round trip. Measured on a 4-core host (2026-10-16,
+    against commit 8f0408e, traced perfbench ``tier_maintain`` seed 3): the
+    chunked gap-fill's 20 (source, chunk) groups ran as 256 tasks (task
+    skew 88) and the per-tier chunk encodes as 4 x 16 tasks (skew 96),
+    13.4 s of an 18.0 s op; at 8 tasks each the skews were 1.5 and 1.3 and
+    the two stages took 7.3 s of an 11.8 s op. Per-task Python/Arrow
+    overhead, not collisions, was the cost at this size.
+
+    Unknown count: ``max(2 x cores, 256)``. The 256 floor came from a
+    32-core host, where 64 keys hashed into 2 x cores partitions straggled
+    (gap-fill 0.55, chunk encode 0.34 scaling efficiency at 2->8 cores);
+    callers that cannot name their group count keep it."""
     dp2 = df.sparkSession.sparkContext.defaultParallelism * 2
-    floor = 256 if n_keys is None else min(256, 4 * int(n_keys))
-    return max(dp2, floor)
+    if n_keys is None:
+        return max(dp2, 256)
+    return max(1, min(4 * int(n_keys), dp2))
 
 
 def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,

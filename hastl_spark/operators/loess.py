@@ -3,9 +3,10 @@ of the reference's ``LOESS.fit`` entry point (hastl/loess.py:53-90,
 loess.fut:768-811): uniform weights, NaN-aware neighbor windows, optional
 jump subsampling + Hermite reconstruction.
 
-One ``applyInPandas`` group per series key; the kernel inside is the same
-float64 NumPy used by the oracle, so Spark output is bit-identical to
-``hastl_spark.kernel.loess_fit``.
+One ``applyInPandas`` group per series key, behind a hash exchange sized
+by the key count (see ``gapfill._grouped_map_partitions``); the kernel
+inside is the same float64 NumPy used by the oracle, so Spark output is
+bit-identical to ``hastl_spark.kernel.loess_fit``.
 """
 
 from __future__ import annotations
@@ -39,8 +40,9 @@ def loess_smooth(series: DataFrame, q: int, degree: int = 1,
             "smoothed": np.asarray(out, dtype=np.float64),
         })
 
-    # grouped-map partition floor (see gapfill._grouped_map_partitions):
-    # AQE would coalesce the tiny series frame into ~1 task otherwise
+    # explicit hash exchange sized by gapfill._grouped_map_partitions
+    # (min(4 x n_keys, 2 x cores) when n_keys is given): AQE would
+    # coalesce the tiny series frame into ~1 task otherwise
     from pyspark.sql import functions as F
 
     from .gapfill import _grouped_map_partitions

@@ -3,9 +3,10 @@ the engine twin of the reference's summary entries (stl.fut:481-500:
 ``trend_magnitude`` = OLS slope of the trend component, ``seasonal_amplitude``
 = max-min of the seasonal component).
 
-One Arrow grouped-map task per series key, with the grouped-map partition
-floor applied (see gapfill._grouped_map_partitions): without it, AQE
-coalesces the tiny decomposition frame into ~1 task and serializes keys.
+One Arrow grouped map per series key behind an explicit hash exchange
+sized by ``gapfill._grouped_map_partitions``: ``min(4 x n_keys,
+2 x cores)`` tasks when the caller passes ``n_keys``. Without the exchange,
+AQE coalesces the tiny decomposition frame into ~1 task and serializes keys.
 """
 
 from __future__ import annotations

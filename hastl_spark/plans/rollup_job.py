@@ -5,8 +5,9 @@
 Stages (SURVEY.md §3.4):
   sequences -> token-invariant check -> event-time derivation ->
   salted 1m rollup -> MERGE tier_1m -> STL gap-fill (applyInPandas) ->
-  MERGE gapfill_1m -> 1h/1d re-rollup -> MERGE -> Gorilla chunks per tier ->
-  MERGE chunk tables; lineage manifest per run; prints one JSON metrics line.
+  MERGE gapfill_1m -> 1h/1d re-rollup -> MERGE -> one Gorilla encode over
+  all tiers -> MERGE chunk table; lineage manifest per run; prints one JSON
+  metrics line.
 
 Runs incrementally: pass ``--since-bucket N`` to restrict the raw scan to
 buckets >= N (Iceberg snapshot-diff stand-in); MERGE keeps prior rows.
@@ -15,6 +16,7 @@ buckets >= N (Iceberg snapshot-diff stand-in); MERGE keeps prior rows.
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
 import time
@@ -22,8 +24,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hastl_spark.operators.chunks import gorilla_chunks
-from hastl_spark.operators.gapfill import stl_gapfill
+from hastl_spark.operators.chunks import encode_chunks
+from hastl_spark.operators.gapfill import (default_halo_buckets, stl_gapfill,
+                                           touched_chunk_ids)
 from hastl_spark.operators.rollup import rollup_1m, rollup_tier, token_invariant_violations, with_event_time
 from hastl_spark.session import get_spark
 from hastl_spark.sources.sequences import SEQS_PER_BUCKET, generate_scale
@@ -129,15 +132,14 @@ def run_pipeline(
     metrics["tier_1m"] = rec
     t0 = _mark("merge_1m", t0)
     days = sorted({p.split(PART_SEP)[1] for p in metrics["tier_1m"]["partitions"]})
-    # source cardinality sizes the grouped-map partition floors (4x keys)
-    # in gap-fill and chunk encode instead of the blind 256-per-stage worst
-    # case. It must come from the table MANIFEST's full partition set, not
-    # this merge's lineage: the frames those floors size are FULL-TABLE
-    # reads, and an incremental run touching a subset of sources would
-    # otherwise shrink the floor to min(256, 4*touched) and reintroduce the
-    # hash-collision straggler the floor exists to prevent (round-4 ADVICE).
-    n_sources = len({p.split(PART_SEP)[0]
-                     for p in t_1m.partition_values()}) or None
+    # The gap-fill and chunk-encode group counts (which size their hash
+    # exchanges, see gapfill._grouped_map_partitions) are multiples of the
+    # source count. It comes from the table MANIFEST's full partition set,
+    # not this merge's lineage: both stages group FULL-TABLE reads, and an
+    # incremental run touching a subset of sources would otherwise
+    # undercount their groups.
+    table_parts = t_1m.partition_values()
+    n_sources = len({p.split(PART_SEP)[0] for p in table_parts}) or None
     t_gap = KeyedTable(os.path.join(out_dir, "gapfill_1m"), ["source", "bucket"],
                        part_spec=DAY_SPEC)
     gap_for_chunks: dict = {}
@@ -149,18 +151,15 @@ def run_pipeline(
         # days' files. Exactness caveat: chunked STL matches the global fit
         # exactly on dense grids only (see operators/gapfill.py docstring).
         kw = dict(stl_kwargs or {})
-        if not kw.get("chunk_buckets"):
-            # chunked mode's group keys are (source x chunk) — more than
-            # n_sources — so the cardinality hint applies only unchunked
-            kw.setdefault("n_keys", n_sources)
-        if incremental_gapfill and t_gap.exists():
-            from hastl_spark.operators.gapfill import (default_halo_buckets,
-                                                       touched_chunk_ids)
-            if not kw.get("chunk_buckets"):
-                raise ValueError("incremental_gapfill requires "
-                                 "stl_kwargs['chunk_buckets']")
-            import datetime
-
+        incremental = incremental_gapfill and t_gap.exists()
+        if incremental and not kw.get("chunk_buckets"):
+            raise ValueError("incremental_gapfill requires "
+                             "stl_kwargs['chunk_buckets']")
+        n_groups = n_sources
+        if kw.get("chunk_buckets"):
+            # chunked groups are (source, chunk): an incremental run
+            # recomputes the chunks whose halo window intersects this run's
+            # touched days, a full run every chunk over the table's days
             bsec = kw.get("bucket_seconds", 60)
             # 'is None', not 'or': an explicit halo_buckets=0 must make the
             # touched-chunk set match the halo stl_gapfill actually applies
@@ -171,13 +170,17 @@ def run_pipeline(
                    if k in ("q_s", "d_s", "jump_s", "jump_t", "jump_l",
                             "n_inner", "n_outer", "q_t", "q_l", "d_t", "d_l")})
             ranges = []
-            for d in days:
+            for d in (days if incremental else
+                      sorted({p.split(PART_SEP)[1] for p in table_parts})):
                 lo = datetime.datetime.fromisoformat(d + "T00:00:00+00:00")
                 lo_pos = int(lo.timestamp()) // bsec
                 ranges.append((lo_pos, lo_pos + 86400 // bsec - 1))
-            kw["only_chunks"] = touched_chunk_ids(
-                ranges, kw["chunk_buckets"], halo)
-            metrics["gapfill_chunks_recomputed"] = len(kw["only_chunks"])
+            chunk_ids = touched_chunk_ids(ranges, kw["chunk_buckets"], halo)
+            if incremental:
+                kw["only_chunks"] = chunk_ids
+                metrics["gapfill_chunks_recomputed"] = len(chunk_ids)
+            n_groups = n_sources and n_sources * len(chunk_ids)
+        kw.setdefault("n_keys", n_groups)
         gap = stl_gapfill(cur_1m, **kw)
         rec = t_gap.merge_upsert(spark, gap, watermark_col="bucket",
                                  keep_data=do_gorilla)
@@ -300,46 +303,48 @@ def run_pipeline(
                    else t_1d.read(spark), "sum_n_tok"),
             "gapfill_1m": (gap_src, "gapfilled"),
         }
-        parts = []
+        # ONE encode stage for all tiers: the tier frames union as
+        # (source, tier, bucket, value double) — lossless, the codec encodes
+        # float64 — and one exchange + grouped map keyed (source, tier)
+        # encodes them, instead of one mostly-idle stage per tier.
+        # A tier missing from an anchored chunk_seconds raises here, rather
+        # than falling back to row-count chunks inside an anchored table
+        windows = ({t: int(chunk_seconds[t]) for t in tier_srcs}
+                   if anchored else None)
+        frames = []
         n_windows = {}
-        # the chunk encoders' grouped-map key is `source` (cardinality from
-        # the merge lineage, hoisted above): floor = 4x keys instead of the
-        # blind 256 — 4 tiers x 256 mostly-empty tasks is pure scheduling
-        # overhead on small source counts
         for tier, (tdf, vcol) in tier_srcs.items():
-            kw = {"n_keys": n_sources}
-            if anchored:
-                W = int(chunk_seconds[tier])
-                kw["chunk_seconds"] = W
-                if inc_chunks:
-                    # re-encode ONLY the time windows intersecting this
-                    # run's touched days (whole windows: the encode needs
-                    # every row of a touched window, not just touched days).
-                    # The gapfill tier's touched set comes from the
-                    # gap-fill MERGE's own partitions — its halo rewrites
-                    # days beyond the 1m merge's set
-                    import datetime as _dt
-
-                    tier_days = days
-                    if tier == "gapfill_1m":
-                        tier_days = sorted({
-                            p.split(PART_SEP)[1]
-                            for p in metrics["gapfill_1m"]["partitions"]})
-                    win_set: set[int] = set()
-                    for d in tier_days:
-                        d0 = int(_dt.datetime.fromisoformat(
-                            d + "T00:00:00+00:00").timestamp())
-                        win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
-                    wins = sorted(win_set)
-                    n_windows[tier] = len(wins)
-                    tdf = tdf.filter(
-                        (F.unix_timestamp("bucket") / W).cast("long")
-                        .isin(wins))
-            parts.append(gorilla_chunks(tdf, vcol, **kw)
-                         .withColumn("tier", F.lit(tier)))
-        chunks = parts[0]
-        for p in parts[1:]:
-            chunks = chunks.unionByName(p)
+            if inc_chunks:
+                # re-encode ONLY the time windows intersecting this
+                # run's touched days (whole windows: the encode needs
+                # every row of a touched window, not just touched days).
+                # The gapfill tier's touched set comes from the
+                # gap-fill MERGE's own partitions — its halo rewrites
+                # days beyond the 1m merge's set
+                W = windows[tier]
+                tier_days = days
+                if tier == "gapfill_1m":
+                    tier_days = sorted({
+                        p.split(PART_SEP)[1]
+                        for p in metrics["gapfill_1m"]["partitions"]})
+                win_set: set[int] = set()
+                for d in tier_days:
+                    d0 = int(datetime.datetime.fromisoformat(
+                        d + "T00:00:00+00:00").timestamp())
+                    win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
+                wins = sorted(win_set)
+                n_windows[tier] = len(wins)
+                tdf = tdf.filter(
+                    (F.unix_timestamp("bucket") / W).cast("long")
+                    .isin(wins))
+            frames.append(tdf.select(
+                "source", F.lit(tier).alias("tier"), "bucket",
+                F.col(vcol).cast("double").alias("value")))
+        tiers = frames[0]
+        for f in frames[1:]:
+            tiers = tiers.unionByName(f)
+        chunks = encode_chunks(tiers, windows,
+                               n_keys=n_sources and n_sources * len(frames))
         if profile_stages:
             # materialize the encode fan-in before the merge: chunk rows
             # are tiny (one per source x tier x window), so the persist is

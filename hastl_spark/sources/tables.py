@@ -61,6 +61,20 @@ def apply_part_spec(df: DataFrame, spec: dict, out_col: str = "_part") -> DataFr
     return df.withColumn(out_col, F.concat_ws(PART_SEP, *parts))
 
 
+def _releasing(view: DataFrame, cached: DataFrame) -> DataFrame:
+    """``view``, a projection of the persisted ``cached``, whose
+    ``unpersist()`` releases ``cached``. Spark keys its cache by plan, so
+    unpersisting the projection alone frees nothing: the cached frame
+    would outlive the caller, and a later identical plan would be served
+    from it instead of running again."""
+    def unpersist(blocking: bool = False) -> DataFrame:
+        cached.unpersist(blocking)
+        return view
+
+    view.unpersist = unpersist
+    return view
+
+
 def _wm_json(v):
     """Watermark value as a JSON-able scalar keeping its comparison type:
     numbers stay numbers (str(9) > str(10) is the bug), everything else
@@ -561,8 +575,8 @@ class KeyedTable:
             record = dict(record)
             record["covers_table"] = (
                 set(man["partitions"]) == set(part_dirs))
-            record["data"] = (stats_src.drop(pc) if self.part_spec
-                              else stats_src)
+            record["data"] = (_releasing(stats_src.drop(pc), stats_src)
+                              if self.part_spec else stats_src)
         return record
 
     def overwrite(self, spark: SparkSession, df: DataFrame,

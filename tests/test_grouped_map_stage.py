@@ -1,0 +1,163 @@
+"""Grouped-map stage shape: exchange sizing from the real group count, one
+Gorilla encode stage for all tiers, and a pipeline that leaves no cached
+frames behind."""
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from hastl_spark.operators.chunks import gorilla_chunks
+from hastl_spark.operators.gapfill import _grouped_map_partitions
+from hastl_spark.plans import rollup_job
+from hastl_spark.plans.rollup_job import run_pipeline
+from hastl_spark.sources.sequences import (SEQS_PER_BUCKET, generate_scale,
+                                           generate_sequences)
+from hastl_spark.sources.tables import KeyedTable
+
+STL_KW = {"chunk_buckets": 1440, "n_p": 52, "q_s": 7}
+ANCHORED = {"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
+            "gapfill_1m": 86400}
+TIER_TABLES = {"1m": ("tier_1m", "sum_n_tok"), "1h": ("tier_1h", "sum_n_tok"),
+               "1d": ("tier_1d", "sum_n_tok"),
+               "gapfill_1m": ("gapfill_1m", "gapfilled")}
+CHUNK_COLS = ["source", "tier", "chunk_start", "chunk_end", "n_points",
+              "crc32", "v_min", "v_max", "v_sum", "blob"]
+
+
+def _seqs(spark, n_days=3):
+    return generate_sequences(spark, n_sources=2, n_buckets=n_days * 1440,
+                              base_rate=4.0, tok_lo=4, tok_hi=16,
+                              with_tokens=True).cache()
+
+
+def _split_at_day(seqs, day):
+    """(the input before ``day``, the input from ``day`` on)."""
+    seq_no = F.split(F.col("doc_id"), "-").getItem(1).cast("long")
+    early = (seq_no / SEQS_PER_BUCKET).cast("long") < day * 1440
+    return seqs.filter(early), seqs.filter(~early)
+
+
+def _sorted_rows(pdf):
+    pdf = pdf[CHUNK_COLS].copy()
+    pdf["blob"] = pdf["blob"].map(bytes)
+    return pdf.sort_values(CHUNK_COLS[:3]).reset_index(drop=True)
+
+
+def _grouped_maps(node):
+    """FlatMapGroupsInPandas nodes in a logical plan tree. A cached input
+    is an InMemoryRelation leaf, so plans that ran before are not counted."""
+    kids = node.children()
+    return (node.nodeName() == "FlatMapGroupsInPandas") + sum(
+        _grouped_maps(kids.apply(i)) for i in range(kids.size()))
+
+
+def _capture_encode(monkeypatch):
+    """Record the grouped-map count of every chunk frame run_pipeline
+    builds."""
+    plans = []
+    encode = rollup_job.encode_chunks
+
+    def spy(*a, **kw):
+        df = encode(*a, **kw)
+        plans.append(_grouped_maps(df._jdf.queryExecution().optimizedPlan()))
+        return df
+
+    monkeypatch.setattr(rollup_job, "encode_chunks", spy)
+    return plans
+
+
+def test_grouped_map_partitions_rule(spark):
+    df = spark.range(1)
+    dp2 = 2 * spark.sparkContext.defaultParallelism
+    for g in (1, 2, dp2 // 4, dp2, 1000):
+        assert _grouped_map_partitions(df, g) == min(4 * g, dp2)
+    assert _grouped_map_partitions(df, 0) == 1  # never 0
+    assert _grouped_map_partitions(df) == max(dp2, 256)  # unknown: unchanged
+
+
+@pytest.mark.slow
+def test_pipeline_sizes_chunked_gapfill_by_group_count(spark, tmp_path,
+                                                       monkeypatch):
+    """Both chunked gap-fill runs (full build, then incremental) get a
+    finite (source x chunk) count — not the unknown-count 256 floor."""
+    seen = []
+    real = rollup_job.stl_gapfill
+
+    def spy(rollup, **kw):
+        seen.append((kw.get("n_keys"), kw.get("only_chunks")))
+        return real(rollup, **kw)
+
+    monkeypatch.setattr(rollup_job, "stl_gapfill", spy)
+    seqs = _seqs(spark)
+    out = str(tmp_path / "t")
+    for s in _split_at_day(seqs, 2):
+        run_pipeline(spark, s, out, do_gorilla=False, check_invariant=False,
+                     stl_kwargs=STL_KW, incremental_gapfill=True)
+    (full_keys, full_only), (inc_keys, inc_only) = seen
+    assert full_only is None and inc_only
+    assert inc_keys == 2 * len(inc_only)
+    # 2 days of epoch-anchored 1440-bucket chunks, plus the halo neighbours
+    assert 2 * 2 <= full_keys < 256
+    assert _grouped_map_partitions(seqs, full_keys) < 256
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("discipline", ["rowcount", "anchored"])
+def test_single_encode_stage_matches_per_tier_chunks(spark, tmp_path,
+                                                     monkeypatch, discipline):
+    """The pipeline's one (source, tier) encode stage writes the same chunk
+    rows, blob included, as gorilla_chunks run per tier on the final
+    tables. The anchored case adds an incremental keyed merge on top."""
+    plans = _capture_encode(monkeypatch)
+    anchored = discipline == "anchored"
+    seqs = _seqs(spark)
+    out = str(tmp_path / discipline)
+    runs = _split_at_day(seqs, 2) if anchored else [seqs]
+    for s in runs:
+        run_pipeline(spark, s, out, check_invariant=False, stl_kwargs=STL_KW,
+                     incremental_gapfill=anchored,
+                     chunk_seconds=ANCHORED if anchored else None)
+    assert plans == [1] * len(runs)
+
+    got = KeyedTable(f"{out}/chunks", ["source", "tier", "chunk_start"]) \
+        .read(spark).toPandas()
+    want = []
+    for tier, (table, vcol) in TIER_TABLES.items():
+        tdf = KeyedTable(f"{out}/{table}", ["source", "bucket"]).read(spark)
+        ch = gorilla_chunks(tdf, vcol, chunk_seconds=(
+            ANCHORED[tier] if anchored else None)).toPandas()
+        want.append(ch.assign(tier=tier))
+    got, want = _sorted_rows(got), _sorted_rows(pd.concat(want))
+    assert len(got) == len(want) > 0
+    pd.testing.assert_frame_equal(got, want)
+
+
+def _completed_tasks(sc, group):
+    st = sc.statusTracker()
+    return sum(st.getStageInfo(s).numCompletedTasks
+               for j in st.getJobIdsForGroup(group)
+               for s in st.getJobInfo(j).stageIds
+               if st.getStageInfo(s) is not None)
+
+
+@pytest.mark.slow
+def test_pipeline_releases_every_cached_frame(spark, tmp_path):
+    """run_pipeline leaves the session's cache empty, so a second build of
+    the same input does all the first build's work again (a leaked cached
+    gap-fill result would be served in place of the STL UDF)."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    seqs = generate_scale(spark, "xs")
+    spark.catalog.clearCache()
+    tasks = []
+    for i in range(2):
+        group = f"rebuild-{i}-{tmp_path.name}"
+        sc.setJobGroup(group, "same-input build")
+        try:
+            run_pipeline(spark, seqs, str(tmp_path / f"b{i}"), overlap=False)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert cache.isEmpty()
+        tasks.append(_completed_tasks(sc, group))
+    assert tasks[1] == tasks[0] > 0
