@@ -96,7 +96,7 @@ def _apply_retention_day_pruned(spark: SparkSession, table: KeyedTable,
                                   replace_partitions=True)
         rewritten = mrec["partitions"]
         rows_kept_boundary = mrec["rows_in"]
-        # boundary partitions whose kept set was empty produced no staged
+        # boundary partitions whose kept set was empty wrote no partition
         # dir -> they were not rewritten and must be dropped outright
         fully_old += [p for p in boundary if p not in set(rewritten)]
 

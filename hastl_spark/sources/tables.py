@@ -11,8 +11,15 @@ directories with an ATOMIC JSON manifest (SURVEY.md §7 hard-part (c)):
 * MERGE = rewrite only the partitions present in the update set (update
   rows win by key), publish by ``os.replace`` of the manifest — readers see
   the old or the new snapshot, never a mix;
-* every merge appends a lineage record (snapshot, rows in/out, wall-clock,
+* every commit appends a lineage record (snapshot, rows in/out, wall-clock,
   watermark) — the per-partition checkpoint the north_rule requires.
+
+Every writer goes through the same two steps: ``_write`` is the only
+partitioned write (one ``data/sNNNNNN`` dir per snapshot, row counts and
+watermarks from the written files' footers), and ``_commit`` is the only
+publish (snapshot bump, lineage record, manifest swap). A crash between
+the two leaves the manifest untouched; the next writer reuses the orphan
+``sNNNNNN`` dir.
 
 Partition column defaults to ``source``; tables that take incremental /
 backfill MERGEs should pass ``part_spec=DAY_SPEC`` to partition by the
@@ -26,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from urllib.parse import unquote
@@ -34,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PART_SEP = "~"
+# dir-name value Spark gives NULL and '' partition values alike
+DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 # part_spec: declarative composite-partition derivation, persisted in the
 # manifest so ANY reader (retention, tests, a resumed run) rebuilds the same
@@ -180,11 +190,52 @@ class KeyedTable:
             return apply_part_spec(df, self.part_spec, self.partition_col)
         return df
 
+    def _pval(self):
+        """The partition value as Column, rendered the way its decoded dir
+        name (and so its manifest key) renders it: NULL and '' both become
+        ``DEFAULT_PARTITION``, anything else its string cast."""
+        s = F.col(self.partition_col).cast("string")
+        return (F.when(s.isNull() | (s == ""), F.lit(DEFAULT_PARTITION))
+                .otherwise(s))
+
     def _publish(self, man: dict) -> None:
         tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(man, f, indent=1, default=str)
         os.replace(tmp, self._manifest_path)  # atomic swap
+
+    def _commit(self, man: dict, op: str, partitions, rows_in: int,
+                t0: float, props: dict | None = None,
+                extra_record: dict | None = None, **fields) -> dict:
+        """Publish ``man`` (whose partitions, watermarks and schema the
+        caller has already updated) as the next snapshot: stamp the layout
+        and ``props``, append the lineage record and swap the manifest.
+        ``fields`` are op-specific record keys placed after ``op``.
+        Returns the record."""
+        snap = man["snapshot"] + 1
+        record = {
+            "snapshot": snap,
+            "op": op,
+            **fields,
+            "partitions": sorted(partitions),
+            "rows_in": rows_in,
+            "wall_s": round(time.time() - t0, 3),
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        if extra_record:
+            record.update(extra_record)
+        man["snapshot"] = snap
+        man["partition_col"] = self.partition_col
+        if self.part_spec:
+            man["part_spec"] = self.part_spec
+        if props:
+            man.setdefault("props", {}).update(props)
+        record["partition_map"] = dict(man["partitions"])
+        record["watermark_map"] = dict(man["watermarks"])
+        record["schema"] = man.get("schema")
+        man["lineage"].append(record)
+        self._publish(man)
+        return record
 
     def snapshot(self) -> int:
         return self._load()["snapshot"]
@@ -260,7 +311,6 @@ class KeyedTable:
         instead of a full-table rewrite."""
         t0 = time.time()
         man = self._load()
-        snap = man["snapshot"] + 1
         dropped = [p for p in pvals if p in man["partitions"]]
         for p in dropped:
             del man["partitions"][p]
@@ -270,26 +320,8 @@ class KeyedTable:
             # generation's schema would reject legitimate retypes and
             # resurrect ghost columns on the next write (review finding)
             man.pop("schema", None)
-        record = {
-            "snapshot": snap,
-            "op": "drop_partitions",
-            "partitions": sorted(dropped),
-            "rows_in": 0,
-            "wall_s": round(time.time() - t0, 3),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        if extra_record:
-            record.update(extra_record)
-        man["snapshot"] = snap
-        man["partition_col"] = self.partition_col
-        if self.part_spec:
-            man["part_spec"] = self.part_spec
-        record["partition_map"] = dict(man["partitions"])
-        record["watermark_map"] = dict(man["watermarks"])
-        record["schema"] = man.get("schema")
-        man["lineage"].append(record)
-        self._publish(man)
-        return record
+        return self._commit(man, "drop_partitions", dropped, 0, t0,
+                            extra_record=extra_record)
 
     @staticmethod
     def _footer_stats(data_dir: str, part_dirs: dict[str, str],
@@ -353,15 +385,41 @@ class KeyedTable:
             return None
         return {pval: s for (pval, _), s in zip(items, stats)}
 
-    @staticmethod
-    def _list_parts(dirpath: str, pc: str) -> dict[str, str]:
-        """Partition-dir listing as {decoded value: dir name}. Spark URL-
-        encodes special characters in partition dir names; stats groupBys
-        see the raw value, so the decoded form is the canonical key."""
-        return {
-            unquote(d.split("=", 1)[1]): d
-            for d in os.listdir(dirpath) if d.startswith(f"{pc}=")
-        }
+    def _write(self, frame: DataFrame, snap: int,
+               watermark_col: str | None):
+        """The table's only partitioned write: ``frame`` (persisted by the
+        caller) into ``data/sNNNNNN``, overwriting an orphan dir a crashed
+        writer left there. Returns ``({pval: rel dir}, {pval: {"_n",
+        "_wm"}})`` keyed by the decoded dir names — Spark URL-encodes
+        special characters in them.
+
+        Clustering rows by the partition column before partitionBy keeps
+        one file per partition — without it every shuffle partition spills
+        a file into every partition dir and downstream scans pay per-file
+        task overhead. At cluster scale this becomes a file-size budget.
+
+        Row counts and watermarks come from the parquet footers of the
+        files just written (metadata-only, zero Spark jobs — Iceberg
+        commit-time stats); the fallback is one aggregation job over the
+        cached frame (still no file re-scan)."""
+        pc = self.partition_col
+        rel_base = os.path.join("data", f"s{snap:06d}")
+        data_dir = os.path.join(self.path, rel_base)
+        (frame.withColumn("_pk", F.col(pc))
+         .repartition(F.col(pc))
+         .write.mode("overwrite").partitionBy(pc)
+         .parquet(data_dir))
+        part_dirs = {unquote(d.split("=", 1)[1]): d
+                     for d in os.listdir(data_dir) if d.startswith(f"{pc}=")}
+        stats = self._footer_stats(data_dir, part_dirs, watermark_col)
+        if stats is None:
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            if watermark_col is not None:
+                aggs.append(F.max(watermark_col).alias("_wm"))
+            stats = {r[0]: r for r in
+                     frame.groupBy(self._pval()).agg(*aggs).collect()}
+        return ({p: os.path.join(rel_base, d) for p, d in part_dirs.items()},
+                stats)
 
     # ---- MERGE ----
     def merge_upsert(self, spark: SparkSession, updates: DataFrame,
@@ -389,143 +447,44 @@ class KeyedTable:
         scaling)."""
         t0 = time.time()
         man = self._load()
-        snap = man["snapshot"] + 1
         pc = self.partition_col
         updates = self._with_part(updates)
         self._check_types(man, updates.schema)  # evolution: add yes, retype no
 
         from pyspark import StorageLevel
 
-        # Stage the updates FIRST, streaming the (potentially expensive)
-        # updates plan through a MEMORY_AND_DISK persist: the plan executes
-        # exactly once (into the cache, during the write), and the
-        # stats/watermark aggregation afterwards reads the cache instead of
-        # re-listing + re-decoding the hundreds of freshly written partition
-        # files — a fixed driver+IO cost that dominated merge latency on
-        # day-partitioned tables. Tier data is already aggregated (bounded
-        # by time-range x keys), so the cached footprint is small; DISK
-        # spill bounds the worst case.
-        # Clustering rows by the partition column before partitionBy keeps
-        # one file per partition — without it every shuffle partition spills
-        # a file into every partition dir and downstream scans pay per-file
-        # task overhead. At cluster scale this becomes a file-size budget.
+        # Persist MEMORY_AND_DISK: the (potentially expensive) updates plan
+        # executes exactly once, into the cache, and the key-merge, the
+        # stats fallback and keep_data read the cache. Tier data is already
+        # aggregated (bounded by time-range x keys), so the cached footprint
+        # is small; DISK spill bounds the worst case.
         updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
-        stats_src = updates
-        merged = None
-        rel_base = os.path.join("data", f"s{snap:06d}")
-        if not man["partitions"]:
-            # first snapshot: the staged write IS the table
-            (updates.withColumn("_pk", F.col(pc))
-             .repartition(F.col(pc))
-             .write.mode("overwrite").partitionBy(pc)
-             .parquet(os.path.join(self.path, rel_base)))
-            part_dirs = self._list_parts(os.path.join(self.path, rel_base), pc)
-        else:
-            # Partition values of the update set, rendered Spark-side with
-            # cast-to-string — the same rendering partition dir names use —
-            # so they compare exactly against the manifest's decoded keys.
-            # This tiny distinct job also materializes the updates cache
-            # (the role the old stage write played). r6: the key-merge path
-            # previously STAGED the updates to parquet and read them back
-            # purely for schema/partition discovery, writing every touched
-            # partition TWICE; the cached updates frame provides both
-            # directly, so a key-merge now writes the data once — half the
-            # write bytes of every incremental merge.
-            def _write_merged(update_frame, existing_rels):
-                """Key-merge ``update_frame`` against the named existing
-                partition dirs and write the snapshot ONCE (shared by the
-                stage-less fast path and the staged fallback — keep the two
-                merge paths byte-identical)."""
-                cur = self._read_dirs(spark, existing_rels)
-                keep = cur.join(update_frame.select(*self.key_cols).distinct(),
-                                on=self.key_cols, how="left_anti")
-                # allowMissingColumns = schema evolution: updates may ADD
-                # columns (existing rows read as NULL) and need not repeat
-                # columns they don't change the shape of — the old
-                # select(*keep.columns) SILENTLY DROPPED added columns
-                m = (keep.unionByName(update_frame, allowMissingColumns=True)
-                     .persist(StorageLevel.MEMORY_AND_DISK))
-                (m.withColumn("_pk", F.col(pc))
-                 .repartition(F.col(pc))
-                 .write.mode("overwrite").partitionBy(pc)
-                 .parquet(os.path.join(self.path, rel_base)))
-                return m
-
-            pvals = [r[0] for r in
-                     updates.select(F.col(pc).cast("string")).distinct()
-                     .collect()]
-            # NULL and EMPTY STRING both render as __HIVE_DEFAULT_PARTITION__
-            # in partition dir names, so neither compares against manifest
-            # keys via cast-to-string — route them to the staged fallback,
-            # whose dir-listing-derived keys handle them exactly (review
-            # finding: the first cut checked only None and silently
-            # overwrote an existing ''-partition instead of key-merging it)
-            degenerate = any(v is None or v == "" for v in pvals)
-            existing = [p for p in pvals if p and p in man["partitions"]]
-            if existing and not replace_partitions and not degenerate:
-                merged = _write_merged(
-                    updates, [man["partitions"][p] for p in existing])
-                part_dirs = self._list_parts(
-                    os.path.join(self.path, rel_base), pc)
-                stats_src = merged
-            else:
-                # nothing to key-merge (fresh partitions, full-partition
-                # replace) or a degenerate partition value: stage, then
-                # rename or merge via the staged read.
-                rel_stage = rel_base + "_stage"
-                stage_dir = os.path.join(self.path, rel_stage)
-                (updates.withColumn("_pk", F.col(pc))
-                 .repartition(F.col(pc))
-                 .write.mode("overwrite").partitionBy(pc)
-                 .parquet(stage_dir))
-                part_dirs = self._list_parts(stage_dir, pc)
-                existing = [p for p in part_dirs if p in man["partitions"]]
-                if existing and not replace_partitions:
-                    staged = self._read_dirs(
-                        spark,
-                        [os.path.join(rel_stage, d)
-                         for d in part_dirs.values()],
-                        with_schema=False)
-                    merged = _write_merged(
-                        staged, [man["partitions"][p] for p in existing])
-                    stats_src = merged
-                else:
-                    # the staged write IS the new snapshot — rename,
-                    # don't rewrite
-                    os.rename(stage_dir, os.path.join(self.path, rel_base))
-
-        # watermarks + row counts: first choice is the parquet footers of
-        # the files just written (metadata-only, zero Spark jobs — Iceberg
-        # commit-time stats); fallback is one aggregation job over the
-        # cached written data (still no file re-scan).
-        stats = self._footer_stats(os.path.join(self.path, rel_base),
-                                   part_dirs, watermark_col)
-        if stats is None:
-            aggs = [F.count(F.lit(1)).alias("_n")]
-            if watermark_col is not None:
-                aggs.append(F.max(watermark_col).alias("_wm"))
-            stats = {str(r[0]): r
-                     for r in stats_src.groupBy(pc).agg(*aggs).collect()}
-        rows = sum(r["_n"] for r in stats.values())
-        if keep_data:
-            # keep stats_src (the written content) cached for the caller;
-            # release whichever staged frame it is not
-            if merged is not None and stats_src is not merged:
-                merged.unpersist()
-            if stats_src is not updates:
-                updates.unpersist()
-        else:
+        written = updates
+        touched = []
+        if man["partitions"] and not replace_partitions:
+            # the only partitions a key-merge reads: those the update set
+            # shares with the manifest (this tiny job also fills the cache)
+            touched = [man["partitions"][r[0]] for r in
+                       updates.select(self._pval()).distinct().collect()
+                       if r[0] in man["partitions"]]
+        if touched:
+            keep = self._read_dirs(spark, touched).join(
+                updates.select(*self.key_cols).distinct(),
+                on=self.key_cols, how="left_anti")
+            # allowMissingColumns = schema evolution: updates may ADD
+            # columns (existing rows read as NULL) and need not repeat
+            # columns they don't change
+            written = (keep.unionByName(updates, allowMissingColumns=True)
+                       .persist(StorageLevel.MEMORY_AND_DISK))
+        parts, stats = self._write(written, man["snapshot"] + 1,
+                                   watermark_col)
+        if written is not updates:
             updates.unpersist()
-            if merged is not None:
-                merged.unpersist()
-        if man["partitions"]:
-            import shutil as _sh
+        if not keep_data:
+            written.unpersist()
 
-            _sh.rmtree(os.path.join(self.path, rel_base + "_stage"),
-                       ignore_errors=True)
-
-        for pval, dirname in part_dirs.items():
-            man["partitions"][pval] = os.path.join(rel_base, dirname)
+        for pval, rel in parts.items():
+            man["partitions"][pval] = rel
             if watermark_col is not None:
                 wm = _wm_json(stats[pval]["_wm"])
                 prev = man["watermarks"].get(pval)
@@ -543,40 +502,19 @@ class KeyedTable:
                     man["watermarks"][pval] = (
                         wm if replace_partitions or prev is None
                         else max(wm, prev))
-
-        self._evolve_schema(man, stats_src.schema)
-
-        record = {
-            "snapshot": snap,
-            "op": "merge_upsert",
-            "partitions": sorted(part_dirs),
-            "rows_in": rows,
-            "wall_s": round(time.time() - t0, 3),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        if extra_record:
-            record.update(extra_record)
-        man["snapshot"] = snap
-        man["partition_col"] = pc
-        if self.part_spec:
-            man["part_spec"] = self.part_spec
         if watermark_col is not None:
             man["watermark_col"] = watermark_col
-        if props:
-            man.setdefault("props", {}).update(props)
-        record["partition_map"] = dict(man["partitions"])
-        record["watermark_map"] = dict(man["watermarks"])
-        record["schema"] = man.get("schema")
-        man["lineage"].append(record)
-        self._publish(man)
+        self._evolve_schema(man, written.schema)
+        record = self._commit(man, "merge_upsert", parts,
+                              sum(r["_n"] for r in stats.values()), t0,
+                              props=props, extra_record=extra_record)
         if keep_data:
             # lineage stays JSON-clean: data/covers_table ride only the
             # returned record, never the persisted manifest
             record = dict(record)
-            record["covers_table"] = (
-                set(man["partitions"]) == set(part_dirs))
-            record["data"] = (_releasing(stats_src.drop(pc), stats_src)
-                              if self.part_spec else stats_src)
+            record["covers_table"] = set(man["partitions"]) == set(parts)
+            record["data"] = (_releasing(written.drop(pc), written)
+                              if self.part_spec else written)
         return record
 
     def overwrite(self, spark: SparkSession, df: DataFrame,
@@ -584,77 +522,37 @@ class KeyedTable:
                   props: dict | None = None) -> dict:
         """Replace the whole table contents with ``df`` as a new snapshot
         (same atomic publish as merge; used by retention). Partitions absent
-        from ``df`` are dropped from the manifest."""
+        from ``df`` are dropped from the manifest; if every row aged out,
+        the snapshot is empty (partitions={})."""
         t0 = time.time()
         man = self._load()
-        snap = man["snapshot"] + 1
-        pc = self.partition_col
-        df = self._with_part(df)
 
         from pyspark import StorageLevel
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        rel_base = os.path.join("data", f"s{snap:06d}")
-        (df.withColumn("_pk", F.col(pc))
-         .repartition(F.col(pc))
-         .write.mode("overwrite").partitionBy(pc)
-         .parquet(os.path.join(self.path, rel_base)))
-        data_dir = os.path.join(self.path, rel_base)
-        part_dirs = self._list_parts(data_dir, pc)
-        if part_dirs:
-            # footer stats first (metadata-only), cached-frame job fallback
-            stats = self._footer_stats(data_dir, part_dirs, watermark_col)
-            if stats is None:
-                aggs = [F.count(F.lit(1)).alias("_n")]
-                if watermark_col is not None:
-                    aggs.append(F.max(watermark_col).alias("_wm"))
-                stats = {str(r[0]): r
-                         for r in df.groupBy(pc).agg(*aggs).collect()}
-        else:
-            # every row aged out: publish an empty snapshot (partitions={})
-            # rather than crashing on a zero-path read
-            stats = {}
+        df = self._with_part(df).persist(StorageLevel.MEMORY_AND_DISK)
+        parts, stats = self._write(df, man["snapshot"] + 1, watermark_col)
         df.unpersist()
-        man["partitions"] = {
-            p: os.path.join(rel_base, d) for p, d in part_dirs.items()}
+        man["partitions"] = parts
         if watermark_col is not None:
-            man["watermarks"] = {p: _wm_json(stats[p]["_wm"]) for p in part_dirs
+            man["watermarks"] = {p: _wm_json(stats[p]["_wm"]) for p in parts
                                  if _wm_json(stats[p]["_wm"]) is not None}
+            man["watermark_col"] = watermark_col
         else:
             # every partition's content was superseded: the previous
             # generation's watermarks are stale metadata — clear them
             # (ghost entries otherwise survive in lineage and rollback)
             man["watermarks"] = {}
             man.pop("watermark_col", None)
-        record = {
-            "snapshot": snap,
-            "op": "overwrite",
-            "partitions": sorted(part_dirs),
-            "rows_in": sum(r["_n"] for r in stats.values()),
-            "wall_s": round(time.time() - t0, 3),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        man["snapshot"] = snap
-        man["partition_col"] = pc
-        if self.part_spec:
-            man["part_spec"] = self.part_spec
-        if props:
-            man.setdefault("props", {}).update(props)
         # overwrite supersedes every data file, so the file schema RESETS
         # to the new frame's (merge evolves the schema; a stale schema here
         # would hide columns added — or keep columns dropped — by the
         # overwrite)
         man.pop("schema", None)
-        if part_dirs:
+        if parts:
             self._evolve_schema(man, df.schema)
-        if watermark_col is not None:
-            man["watermark_col"] = watermark_col
-        record["partition_map"] = dict(man["partitions"])
-        record["watermark_map"] = dict(man["watermarks"])
-        record["schema"] = man.get("schema")
-        man["lineage"].append(record)
-        self._publish(man)
-        return record
+        return self._commit(man, "overwrite", parts,
+                            sum(r["_n"] for r in stats.values()), t0,
+                            props=props)
 
     def delete_where(self, spark: SparkSession, condition) -> dict:
         """Row-level DELETE (Iceberg copy-on-write DML parity): remove rows
@@ -778,6 +676,7 @@ class KeyedTable:
         """Metadata-only rollback: publish a NEW snapshot whose content is
         the partition map of ``snapshot`` (Iceberg rollback semantics — the
         history keeps moving forward, no data files are touched)."""
+        t0 = time.time()
         rec = self._lineage_record(snapshot)
         pm = rec.get("partition_map")
         if pm is None:
@@ -794,7 +693,6 @@ class KeyedTable:
                 f"snapshot {snapshot} of {self.path} was vacuumed "
                 f"(missing dirs: {missing[:3]}...) — cannot roll back")
         man = self._load()
-        snap = man["snapshot"] + 1
         man["partitions"] = dict(pm)
         wm = rec.get("watermark_map")
         man["watermarks"] = (dict(wm) if wm is not None else
@@ -814,22 +712,8 @@ class KeyedTable:
                 man["schema"] = rec["schema"]
             else:
                 man.pop("schema", None)
-        record = {
-            "snapshot": snap,
-            "op": "rollback",
-            "rolled_back_to": snapshot,
-            "partitions": sorted(pm),
-            "rows_in": 0,
-            "wall_s": 0.0,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_map": dict(pm),
-            "watermark_map": dict(man["watermarks"]),
-            "schema": man.get("schema"),
-        }
-        man["snapshot"] = snap
-        man["lineage"].append(record)
-        self._publish(man)
-        return record
+        return self._commit(man, "rollback", pm, 0, t0,
+                            rolled_back_to=snapshot)
 
     def _lineage_record(self, snapshot: int) -> dict:
         rec = next((r for r in self._load()["lineage"]
@@ -842,9 +726,11 @@ class KeyedTable:
 
     def vacuum(self) -> int:
         """Delete data dirs no longer referenced by the manifest (superseded
-        snapshots). Safe w.r.t. the atomic manifest: current readers resolved
-        their file list from a manifest that only names live dirs. Returns
-        the number of removed snapshot dirs."""
+        snapshots, stage dirs older versions left behind). Safe w.r.t. the atomic
+        manifest: current readers resolved their file list from a manifest
+        that only names live dirs. A ``sNNNNNN`` dir numbered above the
+        manifest's snapshot belongs to a writer that has not published yet
+        and is kept. Returns the number of removed dirs."""
         import shutil
 
         man = self._load()
@@ -853,7 +739,9 @@ class KeyedTable:
         removed = 0
         if os.path.isdir(data_root):
             for d in os.listdir(data_root):
-                if d not in live:
-                    shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-                    removed += 1
+                m = re.fullmatch(r"s(\d+)", d)
+                if d in live or (m and int(m.group(1)) > man["snapshot"]):
+                    continue
+                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
+                removed += 1
         return removed

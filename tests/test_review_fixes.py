@@ -151,18 +151,25 @@ def test_sliced_events_read_equals_plain(spark, monkeypatch):
     e._SCAN_PAR_CACHE.clear()
 
 
-def test_merge_key_merges_empty_string_partition(spark, tmp_path):
-    """r6 review finding: '' and NULL partition values both render as
-    __HIVE_DEFAULT_PARTITION__ in dir names, so the stage-less fast path
-    cannot compare them against manifest keys — they must route to the
-    staged fallback and KEY-MERGE, never overwrite the partition."""
+@pytest.mark.parametrize("before, update, want", [
+    pytest.param([("a", 1, 10), ("", 1, 20), ("", 2, 21)],
+                 [("a", 2, 11), ("", 1, 99)],
+                 {("a", 1): 10, ("a", 2): 11, ("", 1): 99, ("", 2): 21},
+                 id="empty_string"),
+    pytest.param([("", 1, 1), ("", 2, 2)],
+                 [(None, 3, 3)],
+                 {("", 1): 1, ("", 2): 2, (None, 3): 3},
+                 id="null_into_empty_string"),
+])
+def test_merge_key_merges_empty_string_partition(spark, tmp_path, before,
+                                                 update, want):
+    """'' and NULL partition values both render as
+    __HIVE_DEFAULT_PARTITION__ in dir names. The merge renders them the
+    same way Spark-side, so an update in either KEY-MERGES into that one
+    partition and never overwrites it."""
     t = KeyedTable(str(tmp_path / "t"), ["source", "bucket"])
-    t.merge_upsert(spark, spark.createDataFrame(
-        [("a", 1, 10), ("", 1, 20), ("", 2, 21)],
-        "source string, bucket int, v long"))
-    t.merge_upsert(spark, spark.createDataFrame(
-        [("a", 2, 11), ("", 1, 99)],
-        "source string, bucket int, v long"))
+    schema = "source string, bucket int, v long"
+    t.merge_upsert(spark, spark.createDataFrame(before, schema))
+    t.merge_upsert(spark, spark.createDataFrame(update, schema))
     got = {(r.source, r.bucket): r.v for r in t.read(spark).collect()}
-    assert got == {("a", 1): 10, ("a", 2): 11,
-                   ("", 1): 99, ("", 2): 21}
+    assert got == want

@@ -1,6 +1,8 @@
 """Time travel + rollback over KeyedTable manifests (Iceberg
 snapshot-read / rollback / expire_snapshots parity)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,6 +94,56 @@ def test_rollback_then_vacuum_keeps_rolled_back_data(spark, table):
     t.rollback(1)
     t.vacuum()  # snapshot-2 dirs unreferenced now; snapshot-1 dirs live
     assert _content(t.read(spark)) == {("a", 1, 10)}
+
+
+def test_vacuum_keeps_unpublished_writer_dir(spark, table):
+    """A data dir numbered above the manifest's snapshot belongs to a
+    writer that has not published yet: vacuum must leave it, or that
+    writer publishes a manifest naming a deleted dir."""
+    t = table
+    t.merge_upsert(spark, _df(spark, [("a", 1, 10)]))
+    t.overwrite(spark, _df(spark, [("a", 1, 99)]))
+    data = os.path.join(t.path, "data")
+    inflight = os.path.join(data, f"s{t.snapshot() + 1:06d}")
+    os.makedirs(os.path.join(inflight, "source=a"))
+    os.makedirs(os.path.join(data, "s000002_stage"))  # older writers' leftover
+    assert t.vacuum() == 2
+    assert sorted(os.listdir(data)) == ["s000002", "s000003"]
+    assert _content(t.read(spark)) == {("a", 1, 99)}
+
+
+def test_crash_before_publish_leaves_table_unchanged(spark, table, tmp_path,
+                                                     monkeypatch):
+    """A fault between the data write and the manifest swap leaves the
+    table as it was; the next merge reuses (overwrites) the orphan dir and
+    ends where a clean run ends."""
+    first = [("a", 1, 10), ("b", 1, 20)]
+    update = [("a", 1, 11), ("a", 2, 12), ("c", 1, 30)]
+
+    def state(t):
+        return (t.snapshot(), t.partition_values(),
+                {p: t.watermark(p) for p in t.partition_values()},
+                _content(t.read(spark)))
+
+    t = table
+    t.merge_upsert(spark, _df(spark, first), watermark_col="bucket")
+    before = state(t)
+
+    def crash(self, man):
+        raise OSError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(KeyedTable, "_publish", crash)
+        with pytest.raises(OSError, match="crash before publish"):
+            t.merge_upsert(spark, _df(spark, update), watermark_col="bucket")
+    assert os.path.isdir(os.path.join(t.path, "data", "s000002"))
+    assert state(t) == before
+
+    t.merge_upsert(spark, _df(spark, update), watermark_col="bucket")
+    clean = KeyedTable(str(tmp_path / "clean"), ["source", "bucket"])
+    clean.merge_upsert(spark, _df(spark, first), watermark_col="bucket")
+    clean.merge_upsert(spark, _df(spark, update), watermark_col="bucket")
+    assert state(t) == state(clean)
 
 
 def test_time_travel_survives_overwrite_retype(spark, table):
