@@ -368,8 +368,7 @@ def q_embeddings_knn(spark, sf_dir):
 
 
 def q_minhash_portable(spark, sf_dir):
-    """MinHash signatures with SQL-portable permutations (value-checked,
-    unlike the xxhash64-based LSH variant)."""
+    """MinHash signatures with SQL-portable permutations (value-checked)."""
     from hastl_spark.operators.dedup import minhash_signatures_portable
 
     docs = _docs(spark, sf_dir, floor=True).filter("doc_id < 300")
@@ -498,8 +497,7 @@ def q_gorilla_roundtrip_1h(spark, sf_dir):
 def q_minhash_pairs(spark, sf_dir):
     """Banded MinHash LSH pairs, SQL-portable end to end (permutations AND
     band folds) — the whole candidate-join plan is value-checked. The
-    xxhash64 variant (same plan shape, faster hash) is pinned by
-    tests/test_breadth.py recall tests."""
+    planted near-dup recall test is in tests/test_breadth.py."""
     from hastl_spark.operators.dedup import minhash_lsh_pairs_portable
 
     docs = _docs(spark, sf_dir).filter("doc_id < 300")
@@ -528,8 +526,8 @@ def q_minhash_incremental(spark, sf_dir):
 
 
 def q_simhash_portable(spark, sf_dir):
-    """SimHash with SQL-portable per-bit hashes (value-checked; the faster
-    xxhash64 variant is exercised by tests + simhash_near_pairs)."""
+    """SimHash with SQL-portable per-bit hashes (value-checked; the planted
+    near-dup test is in tests/test_breadth.py)."""
     from hastl_spark.operators.dedup import simhash_portable
 
     return simhash_portable(_docs(spark, sf_dir, floor=True).filter("doc_id < 300"))

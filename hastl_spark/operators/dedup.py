@@ -6,11 +6,14 @@ Scale notes (the point of each design):
     the shuffle, so cost is ~unique keys, not rows;
   * Jaccard: shingle-explode + self-join on shingle is quadratic only within
     a shingle bucket; at 100 TB use MinHash/LSH instead;
-  * MinHash+LSH: k permutations via k seeded xxhash64 of each shingle
-    (aggregate-min — no UDF), banded into b buckets; candidate pairs only
-    join within a band bucket — linear-ish in corpus size;
-  * SimHash: 64-bit sign-aggregated shingle hashes; near-dup = small Hamming
-    distance, bucketable by bit-bands the same way.
+  * MinHash+LSH: k affine permutations of a polynomial shingle hash
+    (aggregate-min — no UDF), folded into b band buckets; candidate pairs
+    only join within a band bucket — linear-ish in corpus size;
+  * SimHash: 32 sign-aggregated per-bit votes over the same shingle hash;
+    near-dup = small Hamming distance.
+
+MinHash and SimHash use only integer arithmetic that DuckDB reproduces
+bit-for-bit, so each has an ANSI-SQL oracle twin (``*_oracle_sql``).
 """
 
 from __future__ import annotations
@@ -125,16 +128,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     )
 
 
-def minhash_signatures(docs: DataFrame, n: int = 5, k: int = 32,
-                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """k-permutation MinHash signature per doc: sig[j] = min over shingles of
-    xxhash64(shingle, j). Pure Catalyst (explode + groupBy(min))."""
-    grams = char_ngrams(docs, n=n, text_col=text_col, id_col=id_col)
-    mins = [F.min(F.xxhash64(F.col("ngram"), F.lit(j))).alias(f"h{j}") for j in range(k)]
-    sig = grams.groupBy(id_col).agg(*mins)
-    return sig.select(F.col(id_col), F.array(*[f"h{j}" for j in range(k)]).alias("sig"))
-
-
 def _cap_band_buckets(band_rows: DataFrame, max_bucket: int | None,
                       bucket_cols: tuple[str, str] = ("band", "bh")) -> DataFrame:
     """Drop band buckets holding more rows than ``max_bucket`` before the
@@ -156,63 +149,6 @@ def _cap_band_buckets(band_rows: DataFrame, max_bucket: int | None,
     return (band_rows.withColumn("_bn", F.count(F.lit(1)).over(w))
             .filter(F.col("_bn") <= max_bucket)
             .drop("_bn"))
-
-
-def minhash_lsh_pairs(docs: DataFrame, n: int = 5, k: int = 32, bands: int = 8,
-                      threshold: float = 0.5, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      max_bucket: int | None = 65536) -> DataFrame:
-    """MinHash LSH candidate generation + signature-similarity filter.
-
-    Bands of k/bands rows each; docs colliding in >=1 band become candidate
-    pairs (the only join is per-band on the band hash — linear-ish);
-    estimated Jaccard = fraction of matching signature positions.
-    ``max_bucket`` caps the per-(band, hash) bucket size (see
-    :func:`_cap_band_buckets`).
-    """
-    assert k % bands == 0
-    r = k // bands
-    # NOT cached: a .cache() here leaked one entry per call (CacheManager
-    # keys by plan; long-lived sessions accumulate), and the A/B at sf0.1
-    # measured the uncached self-join FASTER (0.91s vs 1.12s min-of-3) —
-    # the cache write+read costs more than recomputing the signature agg,
-    # and at corpus scale the signature frame would spill anyway
-    sig = minhash_signatures(docs, n=n, k=k, text_col=text_col, id_col=id_col)
-    band_rows = sig.select(
-        id_col, "sig",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.xxhash64(*[F.col("sig")[bi * r + j] for j in range(r)]).alias("bh"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "sig", "bb.band", "bb.bh")
-    band_rows = _cap_band_buckets(band_rows, max_bucket)
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
-    cand = (
-        a.join(b, on=["band", "bh"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    match_frac = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        / F.lit(k)
-    )
-    return (
-        cand.withColumn("est_jaccard", F.round(match_frac, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
 
 
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
@@ -246,8 +182,11 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     from .similarity import _dot, _norm, lsh_signatures
 
     if use_lsh:
-        assert dim is not None
-        assert n_bits % n_bands == 0
+        if dim is None:
+            raise ValueError("use_lsh=True needs the embedding dim")
+        if n_bits % n_bands:
+            raise ValueError(f"n_bits={n_bits} is not a multiple of "
+                             f"n_bands={n_bands}")
         r = n_bits // n_bands
         mask = (1 << r) - 1
         sigs = lsh_signatures(embeddings, dim, n_bits=n_bits,
@@ -294,7 +233,7 @@ def dup_group_labels(nodes: DataFrame, pairs: DataFrame, max_iter: int = 20,
                      driver_edge_limit: int = 1_000_000) -> DataFrame:
     """Resolve near-dup PAIRS into GROUPS: connected components by iterative
     min-label propagation — the step that turns any pair-producing dedup
-    operator (Jaccard, MinHash LSH, SimHash, embedding near-dup) into an
+    operator (Jaccard, MinHash LSH, embedding near-dup) into an
     actionable keep/drop set.
 
     ``nodes``: one column ``id_col`` (doc ids; singletons label themselves);
@@ -439,7 +378,9 @@ def dropped_bucket_stats(embeddings: DataFrame, dim: int, n_bits: int = 64,
     (``df.count()`` = number of silenced buckets) instead of silent."""
     from .similarity import lsh_signatures
 
-    assert n_bits % n_bands == 0
+    if n_bits % n_bands:
+        raise ValueError(f"n_bits={n_bits} is not a multiple of "
+                         f"n_bands={n_bands}")
     r = n_bits // n_bands
     mask = (1 << r) - 1
     sigs = lsh_signatures(embeddings, dim, n_bits=n_bits,
@@ -480,8 +421,10 @@ def minhash_signatures_portable(docs: DataFrame, n: int = 5, k: int = 16,
                                 id_col: str = "doc_id") -> DataFrame:
     """MinHash signature with SQL-portable permutations: sig_j = min over
     distinct n-grams g of (a_j * poly(g) + b_j) mod P — value-checkable
-    against an ANSI-SQL oracle, unlike the xxhash64 variant."""
-    assert k <= len(_MINHASH_AB)
+    against an ANSI-SQL oracle (:func:`minhash_portable_oracle_sql`)."""
+    if k > len(_MINHASH_AB):
+        raise ValueError(f"k={k} exceeds the {len(_MINHASH_AB)} fixed "
+                         "MinHash permutations")
     grams = char_ngrams(docs, n=n, text_col=text_col, id_col=id_col)
     # hoist the shared polynomial hash into ONE column: inlining it into
     # each of the k min-aggregates recomputes the n-term Horner chain k
@@ -516,14 +459,18 @@ def minhash_lsh_pairs_portable(docs: DataFrame, n: int = 5, k: int = 16,
     """MinHash LSH candidate pairs with SQL-portable arithmetic end to end
     (permutations AND band hashing), so the ENTIRE banded-join plan —
     signature agg, band fold, per-band self-join, dedup, similarity filter —
-    is value-checkable against a DuckDB oracle. Same plan shape as the
-    faster xxhash64 :func:`minhash_lsh_pairs`; est_jaccard values are exact
-    multiples of 1/k (binary-exact doubles), so cross-engine rounding is
-    stable."""
-    assert k % bands == 0
+    is value-checkable against a DuckDB oracle. est_jaccard values are
+    exact multiples of 1/k (binary-exact doubles), so cross-engine rounding
+    is stable."""
+    if k % bands:
+        raise ValueError(f"k={k} is not a multiple of bands={bands}")
     r = k // bands
     hs = [f"h{j}" for j in range(k)]
-    # uncached on purpose — see minhash_lsh_pairs (leak + measured slower)
+    # NOT cached: a .cache() here leaked one entry per call (CacheManager
+    # keys by plan; long-lived sessions accumulate), and the A/B at sf0.1
+    # measured the uncached self-join FASTER (0.91s vs 1.12s min-of-3) —
+    # the cache write+read costs more than recomputing the signature agg,
+    # and at corpus scale the signature frame would spill anyway
     sig = minhash_signatures_portable(docs, n=n, k=k, text_col=text_col,
                                       id_col=id_col)
     band_structs = [
@@ -634,9 +581,11 @@ def _simhash_bit_sum_sql(a: int, b: int, poly: str) -> str:
 def simhash_portable(docs: DataFrame, n: int = 4, bits: int = 32,
                      text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """SimHash whose per-bit hash family is the portable polynomial hash —
-    value-checkable against an ANSI-SQL oracle (the xxhash64 variant
-    :func:`simhash` is faster but not reproducible outside Spark)."""
-    assert bits <= len(_SIMHASH_AB)
+    value-checkable against an ANSI-SQL oracle
+    (:func:`simhash_portable_oracle_sql`)."""
+    if bits > len(_SIMHASH_AB):
+        raise ValueError(f"bits={bits} exceeds the {len(_SIMHASH_AB)} fixed "
+                         "SimHash bit hashes")
     grams = char_ngrams(docs, n=n, text_col=text_col, id_col=id_col)
     # shared poly hash hoisted once (see minhash_signatures_portable)
     grams = grams.withColumn("_ph", F.expr(_poly_hash_sql("ngram", n)))
@@ -669,69 +618,3 @@ def simhash_portable_oracle_sql(n: int = 4, bits: int = 32, max_doc: int = 300) 
         SELECT doc_id, ({terms}) AS simhash
         FROM grams GROUP BY doc_id
     """
-
-
-def simhash(docs: DataFrame, n: int = 4, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over character n-grams: bit i of the hash is the sign
-    of the sum over shingles of (bit i ? +1 : -1). groupBy-sum per bit, then
-    bit-assemble — no UDF."""
-    grams = char_ngrams(docs, n=n, text_col=text_col, id_col=id_col)
-    h = F.xxhash64("ngram")
-    sums = grams.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(64)
-        ]
-    )
-    acc = F.lit(0).cast("long")
-    for i in range(64):
-        acc = acc.bitwiseOR(
-            F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(0)
-        )
-    return sums.select(F.col(id_col), acc.alias("simhash"))
-
-
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3, n: int = 4,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       max_bucket: int | None = 65536) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, candidate-bucketed on
-    four 16-bit bands. By pigeonhole, a pair at Hamming distance <= 3 must
-    agree on at least one full band, so recall is exact up to the default
-    ``max_hamming=3``; asking for a wider radius returns only the pairs that
-    happen to collide in some band (documented recall loss — use more /
-    rotated bands if a guaranteed radius > 3 is needed)."""
-    # uncached on purpose — see minhash_lsh_pairs (leak + measured slower)
-    sh = simhash(docs, n=n, text_col=text_col, id_col=id_col)
-    bands = sh.select(
-        id_col, "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.shiftright("simhash", bi * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-                )
-                for bi in range(4)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.bh")
-    bands = _cap_band_buckets(bands, max_bucket)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )

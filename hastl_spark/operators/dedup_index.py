@@ -48,7 +48,8 @@ class MinHashIndex:
     PROP_KEY = "minhash_params"
 
     def __init__(self, path: str, n: int = 5, k: int = 16, bands: int = 4):
-        assert k % bands == 0
+        if k % bands:
+            raise ValueError(f"k={k} is not a multiple of bands={bands}")
         self.n, self.k, self.bands = n, k, bands
         self.table = KeyedTable(path, key_cols=["doc_id", "band"],
                                 partition_col="band")

@@ -135,7 +135,8 @@ def lsh_signatures(embeddings: DataFrame, dim: int, n_bits: int = 16, seed: int 
     ~10x slower than one BLAS call per batch."""
     from pyspark.sql.functions import pandas_udf
 
-    assert n_bits <= 64
+    if n_bits > 64:
+        raise ValueError(f"n_bits={n_bits} does not fit a 64-bit signature")
     planes = np.asarray(random_hyperplanes(dim, n_bits, seed), dtype=np.float64).T
 
     @pandas_udf("long")
@@ -201,7 +202,8 @@ def ann_topk_portable(embeddings: DataFrame, queries: DataFrame, dim: int,
     hyperplanes whose sign can flip with summation order. The signature is
     one Arrow-batched int64 matmul per batch (see :func:`_portable_sig_udf`);
     band keys are then cheap codegen bit ops on the packed long."""
-    assert n_bits % bands == 0
+    if n_bits % bands:
+        raise ValueError(f"n_bits={n_bits} is not a multiple of bands={bands}")
     r = n_bits // bands
     planes = portable_int_hyperplanes(dim, n_bits, seed)
     sig_udf = _portable_sig_udf(planes, n_bits)
@@ -302,7 +304,8 @@ def ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int, k: int = 5,
 
     Recall is tunable via (n_bits, bands); candidates are the only rows that
     pay the exact-distance cost, so corpus-side work is ~hash + band join."""
-    assert n_bits % bands == 0
+    if n_bits % bands:
+        raise ValueError(f"n_bits={n_bits} is not a multiple of bands={bands}")
     r = n_bits // bands
     mask = (1 << r) - 1
     sigs = lsh_signatures(embeddings, dim, n_bits, seed, id_col, vec_col)

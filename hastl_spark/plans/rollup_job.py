@@ -21,6 +21,7 @@ import json
 import os
 import time
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,16 +50,16 @@ def run_pipeline(
     stl_kwargs: dict | None = None,
     do_gorilla: bool = True,
     check_invariant: bool = True,
-    overlap: bool = True,
     incremental_gapfill: bool = False,
     chunk_seconds: dict | None = None,
     profile_stages: bool = False,
 ) -> dict:
-    """Full pipeline run. ``overlap=True`` runs the two independent
-    post-1m branches — STL gap-fill and the 1h/1d tier cascade — on
-    concurrent driver threads (Spark schedules their jobs FAIRly across the
-    executor): the cascade's merge latency hides under the STL compute,
-    removing a serial driver segment that Amdahl-caps scaling efficiency.
+    """Full pipeline run. The two independent post-1m branches — STL
+    gap-fill and the 1h/1d tier cascade — run on concurrent driver threads
+    (Spark schedules their jobs FAIRly across the executor): the cascade's
+    merge latency hides under the STL compute, removing a serial driver
+    segment that Amdahl-caps scaling efficiency. The cascade thread
+    inherits the caller's job group and description.
 
     ``incremental_gapfill=True`` (requires ``stl_kwargs['chunk_buckets']``)
     recomputes only the gap-fill chunks whose halo-extended window
@@ -236,29 +237,23 @@ def run_pipeline(
     # merges) are independent given cur_1m: overlapping them hides the
     # cascade's fixed merge latency under the STL work instead of adding it
     # serially (measured as the dominant Amdahl term at small core counts).
-    if overlap:
-        import threading
+    # InheritableThread: the cascade's jobs keep the caller's local
+    # properties (job group, description, scheduler pool)
+    errs: list[BaseException] = []
 
-        errs: list[BaseException] = []
+    def _run(fn):
+        try:
+            fn()
+        except BaseException as e:  # surface thread failures to caller
+            errs.append(e)
 
-        def _run(fn):
-            try:
-                fn()
-            except BaseException as e:  # surface thread failures to caller
-                errs.append(e)
-
-        th = threading.Thread(target=_run, args=(branch_cascade,), daemon=True)
-        th.start()
-        _run(branch_gapfill)
-        th.join()
-        if errs:
-            raise errs[0]
-        t0 = _mark("gapfill+cascade", t0)
-    else:
-        branch_gapfill()
-        t0 = _mark("gapfill", t0)
-        branch_cascade()
-        t0 = _mark("cascade", t0)
+    th = InheritableThread(_run, args=(branch_cascade,), daemon=True)
+    th.start()
+    _run(branch_gapfill)
+    th.join()
+    if errs:
+        raise errs[0]
+    t0 = _mark("gapfill+cascade", t0)
 
     if do_gorilla:
         # ONE unified chunk table keyed (source, tier, chunk_start): the four
@@ -419,8 +414,6 @@ def main(argv=None):
     ap.add_argument("--since-bucket", type=int, default=None,
                     help="incremental: only process bucket index >= N")
     ap.add_argument("--no-gorilla", action="store_true")
-    ap.add_argument("--no-overlap", action="store_true",
-                    help="disable concurrent gapfill/cascade branches")
     ap.add_argument("--incremental-gapfill", action="store_true",
                     help="recompute only gap-fill chunks touched by this "
                          "run's days (requires --chunk-buckets)")
@@ -461,7 +454,6 @@ def main(argv=None):
         metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
-                               overlap=not args.no_overlap,
                                incremental_gapfill=args.incremental_gapfill,
                                chunk_seconds=(DEFAULT_CHUNK_SECONDS
                                               if args.anchored_chunks else None),
@@ -482,7 +474,6 @@ def main(argv=None):
         metrics = run_pipeline(spark, seqs, out, n_salts=args.n_salts,
                                do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
-                               overlap=not args.no_overlap,
                                incremental_gapfill=args.incremental_gapfill,
                                chunk_seconds=(DEFAULT_CHUNK_SECONDS
                                               if args.anchored_chunks else None),

@@ -8,11 +8,10 @@ from pyspark.sql import functions as F
 
 from hastl_spark.operators.dedup import (
     exact_dup_groups,
-    minhash_lsh_pairs,
-    minhash_signatures,
+    minhash_lsh_pairs_portable,
+    minhash_signatures_portable,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_pairs,
+    simhash_portable,
 )
 from hastl_spark.operators.multimodal import extract_features, synthetic_media
 from hastl_spark.operators.similarity import ann_topk, brute_force_topk, with_cosine
@@ -110,11 +109,12 @@ def test_minhash_lsh_recalls_near_dup_and_estimates_jaccard(spark, docs):
         F.concat(F.col("text"), F.lit(" y")).alias("text"),
         "lang", "source", "n_chars")
     d2 = base.select("doc_id", "text", "lang", "source", "n_chars").unionByName(near)
-    pairs = minhash_lsh_pairs(d2, n=5, k=32, bands=8, threshold=0.5).collect()
+    pairs = minhash_lsh_pairs_portable(d2, n=5, k=16, bands=4,
+                                       threshold=0.35).collect()
     hit = [r for r in pairs if r.id_a == 3 and r.id_b == 900003]
     assert hit and hit[0].est_jaccard > 0.7
-    sig = minhash_signatures(d2.filter("doc_id = 3"), n=5, k=32).collect()[0]["sig"]
-    assert len(sig) == 32
+    sig = minhash_signatures_portable(d2.filter("doc_id = 3"), n=5, k=16)
+    assert sig.columns == ["doc_id"] + [f"h{j}" for j in range(16)]
 
 
 def test_simhash_near_pairs(spark, docs):
@@ -124,10 +124,19 @@ def test_simhash_near_pairs(spark, docs):
         F.concat(F.col("text"), F.lit(" z")).alias("text"),
         "lang", "source", "n_chars")
     d2 = base.select("doc_id", "text", "lang", "source", "n_chars").unionByName(near)
-    sh = dict(simhash(d2.filter("doc_id in (7, 900007)")).collect())
-    assert bin(sh[7] ^ sh[900007]).count("1") <= 8
-    pairs = simhash_near_pairs(d2, max_hamming=8).collect()
-    assert any(r.id_a == 7 and r.id_b == 900007 for r in pairs)
+    sh = dict(simhash_portable(d2.filter("doc_id in (7, 900007)")).collect())
+    assert bin(sh[7] ^ sh[900007]).count("1") <= 4  # of 32 bits
+
+
+@pytest.mark.parametrize("call", [
+    lambda d: minhash_signatures_portable(d, k=17),
+    lambda d: minhash_lsh_pairs_portable(d, k=16, bands=5),
+    lambda d: simhash_portable(d, bits=33),
+], ids=["minhash_k17", "lsh_bands5", "simhash_bits33"])
+def test_dedup_rejects_bad_parameters(docs, call):
+    # ValueError, not assert: the check must survive python -O
+    with pytest.raises(ValueError):
+        call(docs)
 
 
 def test_fingerprint_np_equals_catalyst(spark):

@@ -144,7 +144,9 @@ def _completed_tasks(sc, group):
 def test_pipeline_releases_every_cached_frame(spark, tmp_path):
     """run_pipeline leaves the session's cache empty, so a second build of
     the same input does all the first build's work again (a leaked cached
-    gap-fill result would be served in place of the STL UDF)."""
+    gap-fill result would be served in place of the STL UDF). Every job it
+    runs, the overlapped cascade thread's included, lands in the caller's
+    job group."""
     sc = spark.sparkContext
     cache = spark._jsparkSession.sharedState().cacheManager()
     seqs = generate_scale(spark, "xs")
@@ -152,12 +154,14 @@ def test_pipeline_releases_every_cached_frame(spark, tmp_path):
     tasks = []
     for i in range(2):
         group = f"rebuild-{i}-{tmp_path.name}"
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
         sc.setJobGroup(group, "same-input build")
         try:
-            run_pipeline(spark, seqs, str(tmp_path / f"b{i}"), overlap=False)
+            run_pipeline(spark, seqs, str(tmp_path / f"b{i}"))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert cache.isEmpty()
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
         tasks.append(_completed_tasks(sc, group))
     assert tasks[1] == tasks[0] > 0
