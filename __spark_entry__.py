@@ -483,9 +483,10 @@ def q_gorilla_roundtrip_1h(spark, sf_dir):
     chunks back to points — value-checked against the plain hourly-rollup SQL
     (so delta-of-delta + XOR-float encode/decode is bit-exact end to end)."""
     from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
+    from hastl_spark.plans.rollup_job import DEFAULT_CHUNK_SECONDS
 
     h1 = _rollup_events_1h_raw(spark, sf_dir).withColumnRenamed("event_type", "source")
-    ch = gorilla_chunks(h1, "sum_value", n_keys=8)
+    ch = gorilla_chunks(h1, "sum_value", DEFAULT_CHUNK_SECONDS["1h"], n_keys=8)
     pts = decode_chunks_df(ch)
     return pts.select(
         "source",

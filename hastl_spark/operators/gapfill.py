@@ -120,37 +120,10 @@ def stl_gapfill(
                          "recomputation is defined on the chunked grid)")
 
     def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        source = key[0]
-        pdf = pdf.sort_values("bucket")
-        # duplicate buckets (shouldn't occur in rollup output, but) keep
-        # the first row — SAME policy as the chunked path, which dedups
-        # via index.duplicated(); reindex on a duplicated DatetimeIndex
-        # would raise here while the chunked path silently answers
-        pdf = pdf[~pdf["bucket"].duplicated()]
-        idx = pd.DatetimeIndex(pdf["bucket"])
-        grid = pd.date_range(idx.min(), idx.max(), freq=freq)
-        s = pd.Series(pdf[value_col].astype("float64").values, index=idx)
-        s = s.reindex(grid)
-        cnt = pd.Series(pdf["cnt"].values, index=idx).reindex(grid).fillna(0).astype("int64")
-        y = s.values  # float64, NaN at gaps
-        n = len(y)
-        if n < 2 * n_p:
-            # series too short for a seasonal fit: pass through, no decomposition
-            nanv = np.full(n, np.nan)
-            return pd.DataFrame({
-                key_col: source, "bucket": grid, "y": y,
-                "seasonal": nanv, "trend": nanv, "remainder": nanv,
-                "gapfilled": y, "cnt": cnt.values,
-            })
-        p = canonicalize_stl_params(n, n_p, **params)
-        S, T, R = stl_filt(y[None, :].astype(np.float32), p)
-        S, T, R = S[0].astype(np.float64), T[0].astype(np.float64), R[0].astype(np.float64)
-        gapfilled = np.where(np.isnan(y), S + T, y)
-        return pd.DataFrame({
-            key_col: source, "bucket": grid, "y": y,
-            "seasonal": S, "trend": T, "remainder": R,
-            "gapfilled": gapfilled, "cnt": cnt.values,
-        })
+        grid = pd.date_range(pdf["bucket"].min(), pdf["bucket"].max(),
+                             freq=freq)
+        return _decompose(key_col, key[0], pdf, value_col, grid, n_p,
+                          params, slice(None))
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
     # Pin the grouped-map parallelism: the rolled-up input is small in bytes,
@@ -189,6 +162,39 @@ def _grouped_map_partitions(df: DataFrame, n_keys: int | None = None) -> int:
     return max(1, min(4 * int(n_keys), dp2))
 
 
+def _decompose(key_col: str, source, pdf: pd.DataFrame, value_col: str,
+               grid: pd.DatetimeIndex, n_p: int, params: dict,
+               interior: slice) -> pd.DataFrame:
+    """One grouped-map task's body: densify ``pdf``'s (bucket, value, cnt)
+    rows onto ``grid`` (NaN value / 0 count at gaps; a duplicated bucket
+    keeps its first row, as reindex raises on a duplicated index),
+    STL-decompose the grid series and return the ``interior`` grid
+    positions as GAPFILL_SCHEMA rows. A series shorter than two seasonal
+    cycles passes through undecomposed (S/T/R NaN, gapfilled = y)."""
+    idx = pd.DatetimeIndex(pdf["bucket"])
+    first = ~idx.duplicated()
+    idx = idx[first]
+    y = (pd.Series(pdf[value_col].astype("float64").values[first], index=idx)
+         .reindex(grid).values)  # float64, NaN at gaps
+    cnt = (pd.Series(pdf["cnt"].values[first], index=idx)
+           .reindex(grid).fillna(0).astype("int64").values)
+    n = len(y)
+    if n < 2 * n_p:
+        S = T = R = np.full(n, np.nan)
+        gapfilled = y
+    else:
+        p = canonicalize_stl_params(n, n_p, **params)
+        S, T, R = (a[0].astype(np.float64)
+                   for a in stl_filt(y[None, :].astype(np.float32), p))
+        gapfilled = np.where(np.isnan(y), S + T, y)
+    return pd.DataFrame({
+        key_col: source, "bucket": grid[interior], "y": y[interior],
+        "seasonal": S[interior], "trend": T[interior],
+        "remainder": R[interior], "gapfilled": gapfilled[interior],
+        "cnt": cnt[interior],
+    })
+
+
 def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
                          n_p: int, params: dict, key_col: str,
                          chunk_buckets: int, halo_buckets: int | None,
@@ -219,8 +225,6 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
     anyway; size chunks to the retention window's plausible gap scale.
     """
     from pyspark.sql import functions as F
-
-    from ..kernel import canonicalize_stl_params
 
     C = int(chunk_buckets)
     if halo_buckets is None:
@@ -263,38 +267,16 @@ def _stl_gapfill_chunked(rollup: DataFrame, value_col: str, bucket_seconds: int,
         kp1 = int(pdf["_p1"].iloc[0])
         lo = max(k * C - H, kp0)
         hi = min((k + 1) * C - 1 + H, kp1)
-        grid = pd.to_datetime(
-            np.arange(lo, hi + 1) * bucket_seconds, unit="s")
-        idx = pd.DatetimeIndex(pdf["bucket"])
-        s = pd.Series(pdf[value_col].astype("float64").values, index=idx)
-        s = s[~s.index.duplicated()].reindex(grid)
-        cnt = (pd.Series(pdf["cnt"].values, index=idx)[lambda x: ~x.index.duplicated()]
-               .reindex(grid).fillna(0).astype("int64"))
-        y = s.values
-        n = len(y)
         i_lo = max(k * C, kp0) - lo             # first interior offset
         i_hi = min((k + 1) * C - 1, kp1) - lo   # last interior offset
-        interior = slice(i_lo, i_hi + 1)
         if i_hi < i_lo:
             return pd.DataFrame(columns=["__k", "bucket", "y", "seasonal",
                                          "trend", "remainder", "gapfilled",
                                          "cnt"]).rename(columns={"__k": key_col})
-        if n < 2 * n_p:
-            nanv = np.full(n, np.nan)
-            S = T = R = nanv
-            gapfilled = y
-        else:
-            pr = canonicalize_stl_params(n, n_p, **params)
-            S, T, R = stl_filt(y[None, :].astype(np.float32), pr)
-            S, T, R = (S[0].astype(np.float64), T[0].astype(np.float64),
-                       R[0].astype(np.float64))
-            gapfilled = np.where(np.isnan(y), S + T, y)
-        return pd.DataFrame({
-            key_col: source, "bucket": grid[interior], "y": y[interior],
-            "seasonal": S[interior], "trend": T[interior],
-            "remainder": R[interior], "gapfilled": gapfilled[interior],
-            "cnt": cnt.values[interior],
-        })
+        grid = pd.to_datetime(
+            np.arange(lo, hi + 1) * bucket_seconds, unit="s")
+        return _decompose(key_col, source, pdf, value_col, grid, n_p,
+                          params, slice(i_lo, i_hi + 1))
 
     schema = GAPFILL_SCHEMA.replace("source string", f"{key_col} string")
     df = df.repartition(_grouped_map_partitions(rollup, n_keys),

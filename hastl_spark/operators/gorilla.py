@@ -65,9 +65,10 @@ _MAGIC = b"GOR2"
 # one magic and must never see a mixed table.
 CODEC_VERSION = _MAGIC.decode()
 _U64 = np.uint64
-# read-path guard: our writers cap chunks at <=65536 points (<=0.6 MB value
-# stream); anything vastly larger is corrupt or foreign, and the decode
-# tables would be ~12x the buffer — fail loudly rather than thrash.
+# read-path guard: our writers bound each chunk by its time-anchored window
+# (e.g. 10,080 points for a week of 1m buckets, <0.1 MB value stream);
+# anything vastly larger is corrupt or foreign, and the decode tables would
+# be ~12x the buffer — fail loudly rather than thrash.
 MAX_DECODE_BYTES = 64 << 20
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from hastl_spark.operators.chunks import encode_chunks
 from hastl_spark.operators.gapfill import (default_halo_buckets, stl_gapfill,
                                            touched_chunk_ids)
+from hastl_spark.operators.gorilla import CODEC_VERSION
 from hastl_spark.operators.rollup import rollup_1m, rollup_tier, token_invariant_violations, with_event_time
 from hastl_spark.session import get_spark
 from hastl_spark.sources.sequences import SEQS_PER_BUCKET, generate_scale
@@ -48,7 +49,6 @@ def run_pipeline(
     out_dir: str,
     n_salts: int = 16,
     stl_kwargs: dict | None = None,
-    do_gorilla: bool = True,
     check_invariant: bool = True,
     incremental_gapfill: bool = False,
     chunk_seconds: dict | None = None,
@@ -67,13 +67,15 @@ def run_pipeline(
     STL cost scales with the touched range, not the table's full history.
     The first run on an empty gapfill table computes everything.
 
-    ``chunk_seconds={tier: seconds}`` switches the Gorilla chunk tables to
-    TIME-ANCHORED windows (stable chunk keys under backfill) and a KEYED
-    merge; combined with ``incremental_gapfill=True`` the chunk stage then
-    re-encodes only the windows intersecting this run's touched days —
-    removing the last O(full-history) cost per incremental run. Default
-    (None) keeps the densest row-count chunking with wholesale partition
-    replacement."""
+    Every tier is stored as Gorilla chunks in TIME-ANCHORED windows of
+    ``chunk_seconds={tier: seconds}`` (None: ``DEFAULT_CHUNK_SECONDS``),
+    keyed-merged into one chunk table. Window keys are stable under
+    backfill, so a run into an existing chunk table re-encodes only the
+    windows intersecting each tier's merged partitions — no
+    O(full-history) chunk cost per incremental run. The window map and the
+    codec version are recorded as table props; a run whose map or codec
+    differs from the recorded one re-encodes the whole table as an
+    overwrite snapshot."""
     os.makedirs(out_dir, exist_ok=True)
     metrics: dict = {}
     stage_walls: dict = {}
@@ -143,7 +145,21 @@ def run_pipeline(
     n_sources = len({p.split(PART_SEP)[0] for p in table_parts}) or None
     t_gap = KeyedTable(os.path.join(out_dir, "gapfill_1m"), ["source", "bucket"],
                        part_spec=DAY_SPEC)
-    gap_for_chunks: dict = {}
+    tier_cache: dict = {}
+
+    def _keep(rec, name):
+        """Reuse a merge's cached written frame as the tier's content when
+        it covered every partition (the common non-incremental run) —
+        downstream stages then skip re-listing and re-decoding the freshly
+        written partition files; else release it."""
+        if rec.pop("covers_table", False):
+            tier_cache[name] = rec.pop("data")
+        else:
+            rec.pop("data").unpersist()
+
+    def _content(name, table):
+        df = tier_cache.get(name)
+        return df if df is not None else table.read(spark)
 
     def branch_gapfill():
         # STL gap-fill on the 1m series. Incremental mode recomputes only
@@ -184,14 +200,8 @@ def run_pipeline(
         kw.setdefault("n_keys", n_groups)
         gap = stl_gapfill(cur_1m, **kw)
         rec = t_gap.merge_upsert(spark, gap, watermark_col="bucket",
-                                 keep_data=do_gorilla)
-        if do_gorilla and rec.pop("covers_table", False):
-            # full-table merge (the common non-incremental run): hand the
-            # cached written frame to the chunk encoder instead of
-            # re-listing + re-decoding ~sources x days small parquet files
-            gap_for_chunks["df"] = rec.pop("data")
-        elif do_gorilla:
-            rec.pop("data").unpersist()
+                                 keep_data=True)
+        _keep(rec, "gapfill_1m")
         metrics["gapfill_1m"] = rec
 
     # tier cascade (re-aggregates the maintained 1m table, not the raw
@@ -205,32 +215,19 @@ def run_pipeline(
                       part_spec=MONTH_SPEC)
     t_1d = KeyedTable(os.path.join(out_dir, "tier_1d"), ["source", "bucket"])
 
-    tier_cache: dict = {}
-
-    def _maybe_keep(table, rec, name):
-        """Reuse a merge's cached written frame as the tier's content when
-        it covered every partition; else fall back to a table read."""
-        if rec.pop("covers_table", False):
-            tier_cache[name] = rec.pop("data")
-        elif "data" in rec:
-            rec.pop("data").unpersist()
-        return tier_cache.get(name)
-
     def branch_cascade():
         upd_1m = cur_1m.filter(F.to_date("bucket").cast("string").isin(days))
         r1h = rollup_tier(upd_1m, "1h")
         rec_h = t_1h.merge_upsert(spark, r1h, watermark_col="bucket",
                                   keep_data=True)
-        cur_1h = _maybe_keep(t_1h, rec_h, "1h")
+        _keep(rec_h, "1h")
         metrics["tier_1h"] = rec_h
-        if cur_1h is None:
-            cur_1h = t_1h.read(spark)
-        upd_1h = cur_1h.filter(F.to_date("bucket").cast("string").isin(days))
+        upd_1h = _content("1h", t_1h).filter(
+            F.to_date("bucket").cast("string").isin(days))
         rec_d = t_1d.merge_upsert(spark, rollup_tier(upd_1h, "1d"),
                                   watermark_col="bucket",
-                                  keep_data=do_gorilla)
-        if do_gorilla:
-            _maybe_keep(t_1d, rec_d, "1d")
+                                  keep_data=True)
+        _keep(rec_d, "1d")
         metrics["tier_1d"] = rec_d
 
     # gap-fill (STL pandas-UDF compute) and the 1h/1d cascade (two small
@@ -255,137 +252,107 @@ def run_pipeline(
         raise errs[0]
     t0 = _mark("gapfill+cascade", t0)
 
-    if do_gorilla:
-        # ONE unified chunk table keyed (source, tier, chunk_start): the four
-        # per-tier chunk streams union into a single MERGE (one write job
-        # instead of four — chunk rows are tiny, job latency dominated)
-        t_ch = KeyedTable(os.path.join(out_dir, "chunks"),
-                          ["source", "tier", "chunk_start"],
-                          part_spec=CHUNK_SPEC)
-        anchored = chunk_seconds is not None
-        # chunking-discipline guard (round-3 ADVICE): anchored and row-count
-        # runs produce DIFFERENT chunk_start keys under the same CHUNK_SPEC,
-        # so switching disciplines over existing history would leave stale
-        # overlapping chunks that duplicate points on decode. The discipline
-        # is recorded as a table property; on a switch we force a FULL
-        # re-encode published as an overwrite snapshot (stale partitions
-        # dropped), never an incremental keyed merge.
-        discipline = "anchored" if anchored else "rowcount"
-        from hastl_spark.operators.gorilla import CODEC_VERSION
-
-        prev_disc = t_ch.prop("chunking") if t_ch.exists() else None
-        prev_codec = t_ch.prop("codec") if t_ch.exists() else None
-        # A PRE-EXISTING table with NO recorded discipline (written before
-        # the prop existed) must be treated as a potential mismatch too:
-        # assuming it matches would let an anchored+incremental run keyed-
-        # merge over legacy row-count chunks — exactly the stale-overlap
-        # corruption this guard prevents. Unknown discipline => full
-        # re-encode overwrite, which also stamps the prop going forward.
-        # Same rule for the Gorilla codec version: decode() asserts one
-        # magic, so a merge must never mix GOR1-era rows with GOR2 rows.
-        migrate_chunks = t_ch.exists() and (prev_disc != discipline
-                                            or prev_codec != CODEC_VERSION)
-        inc_chunks = (anchored and incremental_gapfill and t_ch.exists()
-                      and not migrate_chunks)
-        gap_src = gap_for_chunks.get("df")
-        if gap_src is None:
-            gap_src = t_gap.read(spark)
-        tier_srcs = {
-            "1m": (cur_1m, "sum_n_tok"),
-            "1h": (tier_cache.get("1h") if tier_cache.get("1h") is not None
-                   else t_1h.read(spark), "sum_n_tok"),
-            "1d": (tier_cache.get("1d") if tier_cache.get("1d") is not None
-                   else t_1d.read(spark), "sum_n_tok"),
-            "gapfill_1m": (gap_src, "gapfilled"),
-        }
-        # ONE encode stage for all tiers: the tier frames union as
-        # (source, tier, bucket, value double) — lossless, the codec encodes
-        # float64 — and one exchange + grouped map keyed (source, tier)
-        # encodes them, instead of one mostly-idle stage per tier.
-        # A tier missing from an anchored chunk_seconds raises here, rather
-        # than falling back to row-count chunks inside an anchored table
-        windows = ({t: int(chunk_seconds[t]) for t in tier_srcs}
-                   if anchored else None)
-        frames = []
-        n_windows = {}
-        for tier, (tdf, vcol) in tier_srcs.items():
-            if inc_chunks:
-                # re-encode ONLY the time windows intersecting this
-                # run's touched days (whole windows: the encode needs
-                # every row of a touched window, not just touched days).
-                # The gapfill tier's touched set comes from the
-                # gap-fill MERGE's own partitions — its halo rewrites
-                # days beyond the 1m merge's set
-                W = windows[tier]
-                tier_days = days
-                if tier == "gapfill_1m":
-                    tier_days = sorted({
-                        p.split(PART_SEP)[1]
-                        for p in metrics["gapfill_1m"]["partitions"]})
-                win_set: set[int] = set()
-                for d in tier_days:
-                    d0 = int(datetime.datetime.fromisoformat(
-                        d + "T00:00:00+00:00").timestamp())
-                    win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
-                wins = sorted(win_set)
-                n_windows[tier] = len(wins)
-                tdf = tdf.filter(
-                    (F.unix_timestamp("bucket") / W).cast("long")
-                    .isin(wins))
-            frames.append(tdf.select(
-                "source", F.lit(tier).alias("tier"), "bucket",
-                F.col(vcol).cast("double").alias("value")))
-        tiers = frames[0]
-        for f in frames[1:]:
-            tiers = tiers.unionByName(f)
-        chunks = encode_chunks(tiers, windows,
-                               n_keys=n_sources and n_sources * len(frames))
-        if profile_stages:
-            # materialize the encode fan-in before the merge: chunk rows
-            # are tiny (one per source x tier x window), so the persist is
-            # cheap and the stage wall splits into encode vs merge — the
-            # Amdahl decomposition needs to see WHICH half stops scaling.
-            # OPT-IN (scaling_bench passes --profile-stages): the count()
-            # is an extra job barrier that costs ~2s of encode/merge
-            # overlap at small scale, so the default path keeps one job
-            from pyspark import StorageLevel
-
-            chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-            metrics["n_chunks"] = chunks.count()
-            t0 = _mark("chunks_encode", t0)
-        # row-count chunking: chunk sets are REGENERATED from the full tier
-        # each run, and a backfill can shift 65536-point chunk boundaries
-        # (new chunk_start keys overlapping stale rows) — so affected
-        # partitions are replaced wholesale. Time-anchored chunking: keys
-        # are stable, so a keyed upsert replaces exactly the re-encoded
-        # windows. Month sub-partitioning (by chunk_start) + the chunk_end
-        # watermark make retention a metadata-only drop of fully-aged
-        # partitions (plans/retention.py) either way.
+    # ONE unified chunk table keyed (source, tier, chunk_start): the four
+    # per-tier chunk streams union into a single MERGE (one write job
+    # instead of four — chunk rows are tiny, job latency dominated)
+    t_ch = KeyedTable(os.path.join(out_dir, "chunks"),
+                      ["source", "tier", "chunk_start"],
+                      part_spec=CHUNK_SPEC)
+    tier_srcs = {
+        "1m": (cur_1m, "sum_n_tok"),
+        "1h": (_content("1h", t_1h), "sum_n_tok"),
+        "1d": (_content("1d", t_1d), "sum_n_tok"),
+        "gapfill_1m": (_content("gapfill_1m", t_gap), "gapfilled"),
+    }
+    # a tier missing from chunk_seconds raises here, on the driver
+    windows = {t: int((chunk_seconds or DEFAULT_CHUNK_SECONDS)[t])
+               for t in tier_srcs}
+    # Window-map guard: chunks encoded under a different window map (or an
+    # older codec, or a legacy table that recorded no map) have DIFFERENT
+    # chunk_start keys under the same CHUNK_SPEC, so a keyed merge would
+    # leave stale overlapping chunks that duplicate points on decode (and
+    # decode() asserts one codec magic). The map and codec are table props;
+    # on any mismatch the run re-encodes every tier in full and publishes
+    # it as an overwrite snapshot (stale partitions dropped).
+    prev_windows = t_ch.prop("chunk_seconds") if t_ch.exists() else None
+    prev_codec = t_ch.prop("codec") if t_ch.exists() else None
+    migrate_chunks = t_ch.exists() and (prev_windows != windows
+                                        or prev_codec != CODEC_VERSION)
+    # window keys are stable, so on a run into an existing table
+    # re-encoding only the windows each tier's merge touched is exact
+    inc_chunks = t_ch.exists() and not migrate_chunks
+    # ONE encode stage for all tiers: the tier frames union as
+    # (source, tier, bucket, value double) — lossless, the codec encodes
+    # float64 — and one exchange + grouped map keyed (source, tier)
+    # encodes them, instead of one mostly-idle stage per tier.
+    frames = []
+    n_windows = {}
+    for tier, (tdf, vcol) in tier_srcs.items():
         if inc_chunks:
-            metrics["chunk_windows_recomputed"] = n_windows
-        if migrate_chunks:
-            metrics["chunks_discipline_migration"] = {
-                "from": prev_disc, "to": discipline,
-                "from_codec": prev_codec, "to_codec": CODEC_VERSION}
-            metrics["chunks"] = t_ch.overwrite(
-                spark, chunks, watermark_col="chunk_end",
-                props={"chunking": discipline,
-                       "codec": CODEC_VERSION})
-        else:
-            metrics["chunks"] = t_ch.merge_upsert(
-                spark, chunks, watermark_col="chunk_end",
-                replace_partitions=not anchored,
-                props={"chunking": discipline,
-                       "codec": CODEC_VERSION})
-        if profile_stages:
-            chunks.unpersist()
-            t0 = _mark("chunks_merge", t0)
-        else:
-            t0 = _mark("chunks", t0)
+            # re-encode ONLY the time windows intersecting this run's
+            # touched days (whole windows: the encode needs every row of
+            # a touched window, not just touched days). The gapfill
+            # tier's touched set comes from the gap-fill MERGE's own
+            # partitions — its halo rewrites days beyond the 1m merge's
+            W = windows[tier]
+            tier_days = days
+            if tier == "gapfill_1m":
+                tier_days = sorted({
+                    p.split(PART_SEP)[1]
+                    for p in metrics["gapfill_1m"]["partitions"]})
+            win_set: set[int] = set()
+            for d in tier_days:
+                d0 = int(datetime.datetime.fromisoformat(
+                    d + "T00:00:00+00:00").timestamp())
+                win_set.update(range(d0 // W, (d0 + 86399) // W + 1))
+            wins = sorted(win_set)
+            n_windows[tier] = len(wins)
+            tdf = tdf.filter(
+                (F.unix_timestamp("bucket") / W).cast("long").isin(wins))
+        frames.append(tdf.select(
+            "source", F.lit(tier).alias("tier"), "bucket",
+            F.col(vcol).cast("double").alias("value")))
+    tiers = frames[0]
+    for f in frames[1:]:
+        tiers = tiers.unionByName(f)
+    chunks = encode_chunks(tiers, windows,
+                           n_keys=n_sources and n_sources * len(frames))
+    if profile_stages:
+        # materialize the encode fan-in before the merge: chunk rows are
+        # tiny (one per source x tier x window), so the persist is cheap
+        # and the stage wall splits into encode vs merge — the Amdahl
+        # decomposition needs to see WHICH half stops scaling. OPT-IN
+        # (scaling_bench passes --profile-stages): the count() is an
+        # extra job barrier that costs ~2s of encode/merge overlap at
+        # small scale, so the default path keeps one job
+        from pyspark import StorageLevel
+
+        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
+        metrics["n_chunks"] = chunks.count()
+        t0 = _mark("chunks_encode", t0)
+    # keyed upsert: stable window keys replace exactly the re-encoded
+    # windows. Month sub-partitioning (by chunk_start) + the chunk_end
+    # watermark make retention a metadata-only drop of fully-aged
+    # partitions (plans/retention.py).
+    props = {"chunk_seconds": windows, "codec": CODEC_VERSION}
+    if inc_chunks:
+        metrics["chunk_windows_recomputed"] = n_windows
+    if migrate_chunks:
+        metrics["chunks_migration"] = {
+            "from": prev_windows, "to": windows,
+            "from_codec": prev_codec, "to_codec": CODEC_VERSION}
+        metrics["chunks"] = t_ch.overwrite(
+            spark, chunks, watermark_col="chunk_end", props=props)
+    else:
+        metrics["chunks"] = t_ch.merge_upsert(
+            spark, chunks, watermark_col="chunk_end", props=props)
+    if profile_stages:
+        chunks.unpersist()
+        t0 = _mark("chunks_merge", t0)
+    else:
+        t0 = _mark("chunks", t0)
 
     cur_1m.unpersist()
-    if gap_for_chunks.get("df") is not None:
-        gap_for_chunks["df"].unpersist()
     for df_c in tier_cache.values():
         df_c.unpersist()
     wall = time.time() - t_start
@@ -413,15 +380,11 @@ def main(argv=None):
     ap.add_argument("--n-salts", type=int, default=16)
     ap.add_argument("--since-bucket", type=int, default=None,
                     help="incremental: only process bucket index >= N")
-    ap.add_argument("--no-gorilla", action="store_true")
     ap.add_argument("--incremental-gapfill", action="store_true",
                     help="recompute only gap-fill chunks touched by this "
                          "run's days (requires --chunk-buckets)")
     ap.add_argument("--chunk-buckets", type=int, default=None,
                     help="chunked STL gap-fill chunk size in buckets")
-    ap.add_argument("--anchored-chunks", action="store_true",
-                    help="time-anchored Gorilla chunk windows (stable keys; "
-                         "enables incremental chunk re-encode)")
     ap.add_argument("--profile-stages", action="store_true",
                     help="materialize the chunk encode before the merge so "
                          "stage walls split encode vs merge (adds a job "
@@ -452,11 +415,8 @@ def main(argv=None):
                          "chunked grid)")
     if args.repeat == 1 and args.warmup == 0:
         metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
-                               do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
                                incremental_gapfill=args.incremental_gapfill,
-                               chunk_seconds=(DEFAULT_CHUNK_SECONDS
-                                              if args.anchored_chunks else None),
                                profile_stages=args.profile_stages)
         print(json.dumps(metrics["summary"]))
         return
@@ -472,11 +432,8 @@ def main(argv=None):
         out = f"{args.out}_r{i}"
         shutil.rmtree(out, ignore_errors=True)
         metrics = run_pipeline(spark, seqs, out, n_salts=args.n_salts,
-                               do_gorilla=not args.no_gorilla,
                                stl_kwargs=stl_kwargs,
                                incremental_gapfill=args.incremental_gapfill,
-                               chunk_seconds=(DEFAULT_CHUNK_SECONDS
-                                              if args.anchored_chunks else None),
                                profile_stages=args.profile_stages)
         shutil.rmtree(out, ignore_errors=True)
         if i >= args.warmup:

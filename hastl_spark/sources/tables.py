@@ -57,10 +57,11 @@ DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 DAY_SPEC = {"cols": ["source"], "day_of": "bucket"}
 MONTH_SPEC = {"cols": ["source"], "day_of": "bucket", "fmt": "yyyy-MM"}
 # Gorilla chunk tables: (source, tier) plus the chunk's start month — chunk
-# rows are coarse (<=65536 points each), so month granularity keeps file
-# counts sane while letting retention drop fully-aged months metadata-only
-# (droppability decided by the partition's chunk_end watermark, not the
-# start month — a chunk may span months).
+# rows are coarse (one time-anchored window each, e.g. 10,080 points for a
+# week of 1m buckets), so month granularity keeps file counts sane while
+# letting retention drop fully-aged months metadata-only (droppability
+# decided by the partition's chunk_end watermark, not the start month — a
+# chunk may span months).
 CHUNK_SPEC = {"cols": ["source", "tier"], "day_of": "chunk_start", "fmt": "yyyy-MM"}
 
 
@@ -244,7 +245,7 @@ class KeyedTable:
         """Table property from the manifest (Iceberg table-properties
         stand-in). Writers pass ``props=`` to merge_upsert/overwrite; used
         to record invariants of HOW the table's content was produced (e.g.
-        the Gorilla chunking discipline) so a later writer with different
+        the Gorilla chunk window map) so a later writer with different
         assumptions can fail fast or migrate instead of silently mixing."""
         return self._load().get("props", {}).get(key, default)
 
@@ -434,9 +435,9 @@ class KeyedTable:
         ``replace_partitions=True`` switches to delete-then-insert semantics:
         affected partitions are fully superseded by the update rows instead
         of key-merged — for derived tables regenerated wholesale per
-        partition (e.g. Gorilla chunk sets, whose chunk_start keys shift
-        when a backfill moves a chunk boundary: a keyed upsert would leave
-        stale overlapping chunks behind).
+        partition (e.g. retention's rewrite of a boundary partition, which
+        must drop the rows it filtered out: a keyed upsert would keep
+        them).
 
         ``keep_data=True`` leaves the written data CACHED and returns it in
         the record as ``record["data"]`` (caller unpersists). When the merge

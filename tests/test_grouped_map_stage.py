@@ -91,7 +91,7 @@ def test_pipeline_sizes_chunked_gapfill_by_group_count(spark, tmp_path,
     seqs = _seqs(spark)
     out = str(tmp_path / "t")
     for s in _split_at_day(seqs, 2):
-        run_pipeline(spark, s, out, do_gorilla=False, check_invariant=False,
+        run_pipeline(spark, s, out, check_invariant=False,
                      stl_kwargs=STL_KW, incremental_gapfill=True)
     (full_keys, full_only), (inc_keys, inc_only) = seen
     assert full_only is None and inc_only
@@ -102,21 +102,20 @@ def test_pipeline_sizes_chunked_gapfill_by_group_count(spark, tmp_path,
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("discipline", ["rowcount", "anchored"])
+@pytest.mark.parametrize("build", ["full", "incremental"])
 def test_single_encode_stage_matches_per_tier_chunks(spark, tmp_path,
-                                                     monkeypatch, discipline):
+                                                     monkeypatch, build):
     """The pipeline's one (source, tier) encode stage writes the same chunk
     rows, blob included, as gorilla_chunks run per tier on the final
-    tables. The anchored case adds an incremental keyed merge on top."""
+    tables. The incremental case adds an incremental keyed merge on top."""
     plans = _capture_encode(monkeypatch)
-    anchored = discipline == "anchored"
+    incremental = build == "incremental"
     seqs = _seqs(spark)
-    out = str(tmp_path / discipline)
-    runs = _split_at_day(seqs, 2) if anchored else [seqs]
+    out = str(tmp_path / build)
+    runs = _split_at_day(seqs, 2) if incremental else [seqs]
     for s in runs:
         run_pipeline(spark, s, out, check_invariant=False, stl_kwargs=STL_KW,
-                     incremental_gapfill=anchored,
-                     chunk_seconds=ANCHORED if anchored else None)
+                     incremental_gapfill=incremental, chunk_seconds=ANCHORED)
     assert plans == [1] * len(runs)
 
     got = KeyedTable(f"{out}/chunks", ["source", "tier", "chunk_start"]) \
@@ -124,8 +123,7 @@ def test_single_encode_stage_matches_per_tier_chunks(spark, tmp_path,
     want = []
     for tier, (table, vcol) in TIER_TABLES.items():
         tdf = KeyedTable(f"{out}/{table}", ["source", "bucket"]).read(spark)
-        ch = gorilla_chunks(tdf, vcol, chunk_seconds=(
-            ANCHORED[tier] if anchored else None)).toPandas()
+        ch = gorilla_chunks(tdf, vcol, chunk_seconds=ANCHORED[tier]).toPandas()
         want.append(ch.assign(tier=tier))
     got, want = _sorted_rows(got), _sorted_rows(pd.concat(want))
     assert len(got) == len(want) > 0

@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 
 from hastl_spark.operators.gapfill import (default_halo_buckets,
                                            touched_chunk_ids)
-from hastl_spark.plans.rollup_job import run_pipeline
+from hastl_spark.operators.chunks import decode_chunks_df
+from hastl_spark.plans.rollup_job import DEFAULT_CHUNK_SECONDS, run_pipeline
 from hastl_spark.sources.sequences import SEQS_PER_BUCKET, generate_sequences
 from hastl_spark.sources.tables import PART_SEP, KeyedTable
 
@@ -48,14 +49,14 @@ def test_incremental_rewrites_only_touched_days(spark, tmp_path):
     last_day = seqs.filter(_bucket_of(F.col("doc_id")) >= 3 * 1440)
 
     inc_dir = str(tmp_path / "inc")
-    m1 = run_pipeline(spark, first, inc_dir, do_gorilla=False,
+    m1 = run_pipeline(spark, first, inc_dir,
                       check_invariant=False, stl_kwargs=STL_KW,
                       incremental_gapfill=True)
     assert "gapfill_chunks_recomputed" not in m1  # first run = full compute
     gap_snap1 = KeyedTable(f"{inc_dir}/gapfill_1m", ["source", "bucket"])._load()
     parts_before = dict(gap_snap1["partitions"])
 
-    m2 = run_pipeline(spark, last_day, inc_dir, do_gorilla=False,
+    m2 = run_pipeline(spark, last_day, inc_dir,
                       check_invariant=False, stl_kwargs=STL_KW,
                       incremental_gapfill=True)
     # halo (q_s=7 -> 7*52=364 < 1440) reaches one neighbor chunk: the run
@@ -72,7 +73,7 @@ def test_incremental_rewrites_only_touched_days(spark, tmp_path):
 
     # table state == full chunked recompute, bit-exact
     full_dir = str(tmp_path / "full")
-    run_pipeline(spark, seqs, full_dir, do_gorilla=False,
+    run_pipeline(spark, seqs, full_dir,
                  check_invariant=False, stl_kwargs=STL_KW)
     cols = ["source", "bucket", "y", "seasonal", "trend", "gapfilled", "cnt"]
     inc_pdf = (KeyedTable(f"{inc_dir}/gapfill_1m", ["source", "bucket"])
@@ -92,7 +93,7 @@ def test_gorilla_chunks_time_anchored(spark):
     the WINDOW start (stable under backfill), chunk_end the last point."""
     import pandas as pd
 
-    from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
+    from hastl_spark.operators.chunks import gorilla_chunks
 
     buckets = pd.date_range("2026-01-01", periods=3 * 1440, freq="60s")
     pdf = pd.DataFrame({"source": "s1", "bucket": buckets,
@@ -111,43 +112,44 @@ def test_gorilla_chunks_time_anchored(spark):
 
 
 @pytest.mark.slow
-def test_chunking_discipline_switch_drops_stale_chunks(spark, tmp_path):
-    """Switching an existing chunks table from row-count to time-anchored
-    chunking (or back) must NOT leave stale overlapping chunks behind: the
-    discipline is a table property, and a switch forces a full re-encode
-    published as an overwrite snapshot (round-3 ADVICE)."""
+def test_chunk_window_change_reencodes_stale_chunks(spark, tmp_path):
+    """Appending with a different chunk window map must NOT keyed-merge
+    over chunks cut by the old map (their chunk_start keys differ, so old
+    and new chunks would overlap and duplicate points on decode): the
+    window map is a table property, and a change forces a full re-encode
+    published as an overwrite snapshot."""
     CS = {"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
           "gapfill_1m": 86400}
     seqs = _seqs(spark)
-    out = str(tmp_path / "switch")
-    run_pipeline(spark, seqs, out, check_invariant=False,
-                 stl_kwargs={k: v for k, v in STL_KW.items()})
+    first = seqs.filter(_bucket_of(F.col("doc_id")) < 3 * 1440)
+    last_day = seqs.filter(_bucket_of(F.col("doc_id")) >= 3 * 1440)
+    out = str(tmp_path / "windows")
+    run_pipeline(spark, first, out, check_invariant=False,
+                 stl_kwargs=dict(STL_KW), incremental_gapfill=True,
+                 chunk_seconds=CS)
     ch_t = KeyedTable(f"{out}/chunks", ["source", "tier", "chunk_start"])
-    assert ch_t.prop("chunking") == "rowcount"
-    n_rowcount = ch_t.read(spark).count()
+    assert ch_t.prop("chunk_seconds") == CS
 
-    m2 = run_pipeline(spark, seqs, out, check_invariant=False,
+    m2 = run_pipeline(spark, last_day, out, check_invariant=False,
                       stl_kwargs=dict(STL_KW), incremental_gapfill=True,
-                      chunk_seconds=CS)
-    assert m2["chunks_discipline_migration"] == {
-        "from": "rowcount", "to": "anchored",
+                      chunk_seconds=DEFAULT_CHUNK_SECONDS)
+    assert m2["chunks_migration"] == {
+        "from": CS, "to": DEFAULT_CHUNK_SECONDS,
         "from_codec": "GOR2", "to_codec": "GOR2"}
-    assert ch_t.prop("chunking") == "anchored"
-    after = ch_t.read(spark).toPandas()
-    # the anchored 1m tier has one chunk per (source, day-window): any
-    # surviving row-count chunk would add overlapping rows beyond that
-    assert len(after[after.tier == "1m"]) == 2 * N_DAYS
-    # total decoded points must equal the tier sizes exactly (no dupes):
-    # compare per-tier point sums against a fresh anchored-only run
-    fresh = str(tmp_path / "fresh")
-    run_pipeline(spark, seqs, fresh, check_invariant=False,
-                 stl_kwargs=dict(STL_KW), chunk_seconds=CS)
-    f_t = KeyedTable(f"{fresh}/chunks", ["source", "tier", "chunk_start"])
-    a = after.groupby("tier").n_points.sum().sort_index()
-    b = (f_t.read(spark).toPandas().groupby("tier").n_points.sum()
-         .sort_index())
-    assert (a == b).all()
-    assert n_rowcount > 0  # the first run really had row-count chunks
+    assert ch_t.prop("chunk_seconds") == DEFAULT_CHUNK_SECONDS
+    # every tier's chunks decode to exactly that tier's rows (a surviving
+    # 1-day chunk beside its 7-day successor would duplicate points)
+    chunks = ch_t.read(spark)
+    for table, tier, vcol in (("tier_1m", "1m", "sum_n_tok"),
+                              ("gapfill_1m", "gapfill_1m", "gapfilled"),
+                              ("tier_1h", "1h", "sum_n_tok"),
+                              ("tier_1d", "1d", "sum_n_tok")):
+        rows = KeyedTable(f"{out}/{table}", ["source", "bucket"]).read(spark) \
+            .select("source", F.unix_timestamp("bucket").alias("ts"),
+                    F.col(vcol).cast("double").alias("value"))
+        pts = decode_chunks_df(chunks.filter(F.col("tier") == tier))
+        assert pts.count() == rows.count() > 0, table
+        assert rows.exceptAll(pts).count() == 0, table
 
 
 @pytest.mark.slow
@@ -192,11 +194,10 @@ def test_incremental_anchored_chunks_rewrite_only_touched_windows(spark, tmp_pat
 
 @pytest.mark.slow
 def test_legacy_chunks_table_missing_props_forces_overwrite(spark, tmp_path):
-    """A chunks table written before the 'chunking'/'codec' props existed
-    (prop() returns None) must be treated as a potential mismatch: the
-    anchored+incremental run takes the full re-encode OVERWRITE path, never
-    the keyed merge that could leave stale overlapping legacy chunks
-    (round-4 ADVICE)."""
+    """A chunks table written before the 'chunk_seconds'/'codec' props
+    existed (prop() returns None) must be treated as a potential mismatch:
+    the incremental run takes the full re-encode OVERWRITE path, never the
+    keyed merge that could leave stale overlapping legacy chunks."""
     import json
 
     CS = {"1m": 86400, "1h": 365 * 86400, "1d": 3650 * 86400,
@@ -206,21 +207,21 @@ def test_legacy_chunks_table_missing_props_forces_overwrite(spark, tmp_path):
     run_pipeline(spark, seqs, out, check_invariant=False,
                  stl_kwargs=dict(STL_KW), chunk_seconds=CS)
     ch_t = KeyedTable(f"{out}/chunks", ["source", "tier", "chunk_start"])
-    assert ch_t.prop("chunking") == "anchored"
+    assert ch_t.prop("chunk_seconds") == CS
     # simulate a legacy manifest: strip the props block entirely
     man = ch_t._load()
     man.pop("props", None)
     ch_t._publish(man)
-    assert ch_t.prop("chunking") is None and ch_t.prop("codec") is None
+    assert ch_t.prop("chunk_seconds") is None and ch_t.prop("codec") is None
 
     m2 = run_pipeline(spark, seqs, out, check_invariant=False,
                       stl_kwargs=dict(STL_KW), incremental_gapfill=True,
                       chunk_seconds=CS)
-    mig = m2["chunks_discipline_migration"]
-    assert mig["from"] is None and mig["to"] == "anchored"
+    mig = m2["chunks_migration"]
+    assert mig["from"] is None and mig["to"] == CS
     assert mig["from_codec"] is None and mig["to_codec"] == "GOR2"
     # the overwrite re-stamped both props
-    assert ch_t.prop("chunking") == "anchored"
+    assert ch_t.prop("chunk_seconds") == CS
     assert ch_t.prop("codec") == "GOR2"
     # table content identical to a fresh anchored run (no dupes/stale rows)
     fresh = str(tmp_path / "fresh2")

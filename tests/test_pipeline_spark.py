@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from hastl_spark.kernel import canonicalize_stl_params
 from hastl_spark.kernel.stl import stl_filt
-from hastl_spark.operators.chunks import decode_chunks, gorilla_chunks
+from hastl_spark.operators.chunks import decode_chunks_df, gorilla_chunks
 from hastl_spark.operators.densify import densify_grid
 from hastl_spark.operators.gapfill import stl_gapfill
 from hastl_spark.operators.rollup import (
@@ -171,8 +171,10 @@ def test_merge_stats_from_parquet_footers(spark, r1m, tmp_path):
 
 
 def test_gorilla_chunks_roundtrip(spark, r1m):
-    chunks = gorilla_chunks(r1m, "sum_n_tok", max_points_per_chunk=100).toPandas()
-    pts = decode_chunks(chunks)
+    chunks = gorilla_chunks(r1m, "sum_n_tok", chunk_seconds=6000)
+    pts = decode_chunks_df(chunks).toPandas()
+    chunks = chunks.toPandas()
+    assert len(chunks) > pts.source.nunique()  # several windows per source
     pdf = r1m.toPandas().sort_values(["source", "bucket"])
     for src, g in pts.groupby("source"):
         sub = pdf[pdf.source == src]
@@ -224,25 +226,24 @@ def test_replace_partitions_supersedes_stale_chunk_rows(spark, r1m, tmp_path):
     """Backfill scenario from ADVICE: chunk regeneration that shifts chunk
     boundaries must fully supersede the partition's old chunk rows (a keyed
     upsert would leave stale overlapping chunks -> double-counted points)."""
-    from hastl_spark.operators.chunks import decode_chunks
-
     t = KeyedTable(str(tmp_path / "chunks"), ["source", "tier", "chunk_start"],
                    part_spec={"cols": ["source", "tier"]})
     late = r1m.orderBy("source", "bucket")  # deterministic
     # run 1: chunks over buckets EXCLUDING each source's first 3 (simulates
-    # the backfill arriving later); small chunk size so boundaries shift
+    # the backfill arriving later) in 3000-s windows
     from pyspark.sql import Window
     w = Window.partitionBy("source").orderBy("bucket")
     ranked = late.withColumn("_rn", F.row_number().over(w))
     ch1 = gorilla_chunks(ranked.filter("_rn > 3").drop("_rn"), "sum_n_tok",
-                         max_points_per_chunk=100).withColumn("tier", F.lit("1m"))
+                         chunk_seconds=3000).withColumn("tier", F.lit("1m"))
     t.merge_upsert(spark, ch1, replace_partitions=True)
-    # run 2 (backfill): chunks regenerated over the FULL series
+    # run 2 (backfill): chunks regenerated over the FULL series in 6000-s
+    # windows, so every other run-1 chunk_start key has no run-2 twin
     ch2 = gorilla_chunks(ranked.drop("_rn"), "sum_n_tok",
-                         max_points_per_chunk=100).withColumn("tier", F.lit("1m"))
+                         chunk_seconds=6000).withColumn("tier", F.lit("1m"))
     t.merge_upsert(spark, ch2, replace_partitions=True)
 
-    pts = decode_chunks(t.read(spark).toPandas())
+    pts = decode_chunks_df(t.read(spark)).toPandas()
     exp = r1m.toPandas()
     # no double counting: decoded point count == input rows exactly
     assert len(pts) == len(exp)

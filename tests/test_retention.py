@@ -13,7 +13,7 @@ from hastl_spark.sources.tables import KeyedTable
 def test_retention_drops_old_buckets_only(spark, tmp_path):
     seqs = generate_scale(spark, "xs").cache()
     out = str(tmp_path / "tiers")
-    run_pipeline(spark, seqs, out, do_gorilla=False, check_invariant=False)
+    run_pipeline(spark, seqs, out, check_invariant=False)
 
     t = KeyedTable(f"{out}/tier_1m", ["source", "bucket"])
     before = t.read(spark)
@@ -87,7 +87,7 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
     from hastl_spark.plans.retention import apply_chunk_retention
     from hastl_spark.sources.tables import CHUNK_SPEC, PART_SEP
 
-    # 3 months of hourly points, one chunk per month (encoded per-month so
+    # 3 months of hourly points in one-day chunks (encoded per-month so
     # chunk boundaries align with partitions for crisp assertions)
     ch = None
     for start, hours in (("2026-01-01", 31 * 24), ("2026-02-01", 28 * 24),
@@ -96,7 +96,8 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
             "source": "s1",
             "bucket": pd.date_range(start, periods=hours, freq="3600s"),
             "sum_n_tok": 5.0})
-        cm = gorilla_chunks(spark.createDataFrame(pdf), "sum_n_tok")
+        cm = gorilla_chunks(spark.createDataFrame(pdf), "sum_n_tok",
+                            chunk_seconds=86400)
         ch = cm if ch is None else ch.unionByName(cm)
     ch = ch.withColumn("tier", F.lit("1m"))
     ch = ch.unionByName(ch.withColumn("tier", F.lit("1d")))
