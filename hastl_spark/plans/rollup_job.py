@@ -52,7 +52,6 @@ def run_pipeline(
     check_invariant: bool = True,
     incremental_gapfill: bool = False,
     chunk_seconds: dict | None = None,
-    profile_stages: bool = False,
 ) -> dict:
     """Full pipeline run. The two independent post-1m branches — STL
     gap-fill and the 1h/1d tier cascade — run on concurrent driver threads
@@ -317,19 +316,6 @@ def run_pipeline(
         tiers = tiers.unionByName(f)
     chunks = encode_chunks(tiers, windows,
                            n_keys=n_sources and n_sources * len(frames))
-    if profile_stages:
-        # materialize the encode fan-in before the merge: chunk rows are
-        # tiny (one per source x tier x window), so the persist is cheap
-        # and the stage wall splits into encode vs merge — the Amdahl
-        # decomposition needs to see WHICH half stops scaling. OPT-IN
-        # (scaling_bench passes --profile-stages): the count() is an
-        # extra job barrier that costs ~2s of encode/merge overlap at
-        # small scale, so the default path keeps one job
-        from pyspark import StorageLevel
-
-        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-        metrics["n_chunks"] = chunks.count()
-        t0 = _mark("chunks_encode", t0)
     # keyed upsert: stable window keys replace exactly the re-encoded
     # windows. Month sub-partitioning (by chunk_start) + the chunk_end
     # watermark make retention a metadata-only drop of fully-aged
@@ -346,11 +332,7 @@ def run_pipeline(
     else:
         metrics["chunks"] = t_ch.merge_upsert(
             spark, chunks, watermark_col="chunk_end", props=props)
-    if profile_stages:
-        chunks.unpersist()
-        t0 = _mark("chunks_merge", t0)
-    else:
-        t0 = _mark("chunks", t0)
+    _mark("chunks", t0)
 
     cur_1m.unpersist()
     for df_c in tier_cache.values():
@@ -385,10 +367,6 @@ def main(argv=None):
                          "run's days (requires --chunk-buckets)")
     ap.add_argument("--chunk-buckets", type=int, default=None,
                     help="chunked STL gap-fill chunk size in buckets")
-    ap.add_argument("--profile-stages", action="store_true",
-                    help="materialize the chunk encode before the merge so "
-                         "stage walls split encode vs merge (adds a job "
-                         "barrier; scaling_bench turns this on)")
     ap.add_argument("--repeat", type=int, default=1,
                     help="timed pipeline executions in this session (bench)")
     ap.add_argument("--warmup", type=int, default=0,
@@ -416,8 +394,7 @@ def main(argv=None):
     if args.repeat == 1 and args.warmup == 0:
         metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
                                stl_kwargs=stl_kwargs,
-                               incremental_gapfill=args.incremental_gapfill,
-                               profile_stages=args.profile_stages)
+                               incremental_gapfill=args.incremental_gapfill)
         print(json.dumps(metrics["summary"]))
         return
 
@@ -433,8 +410,7 @@ def main(argv=None):
         shutil.rmtree(out, ignore_errors=True)
         metrics = run_pipeline(spark, seqs, out, n_salts=args.n_salts,
                                stl_kwargs=stl_kwargs,
-                               incremental_gapfill=args.incremental_gapfill,
-                               profile_stages=args.profile_stages)
+                               incremental_gapfill=args.incremental_gapfill)
         shutil.rmtree(out, ignore_errors=True)
         if i >= args.warmup:
             walls.append(metrics["summary"]["wall_s"])

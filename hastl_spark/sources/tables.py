@@ -308,8 +308,7 @@ class KeyedTable:
         """Metadata-only partition drop: a new snapshot whose manifest no
         longer names the given partitions — no data files are read or
         written (vacuum reclaims snapshot dirs once nothing references
-        them). This is what makes day-partitioned retention O(boundary day)
-        instead of a full-table rewrite."""
+        them)."""
         t0 = time.time()
         man = self._load()
         dropped = [p for p in pvals if p in man["partitions"]]
@@ -327,16 +326,17 @@ class KeyedTable:
     @staticmethod
     def _footer_stats(data_dir: str, part_dirs: dict[str, str],
                       watermark_col: str | None):
-        """Per-partition ``{pval: {"_n": rows, "_wm": max}}`` read from the
-        parquet FOOTERS of the just-written files — metadata-only, the way
-        an Iceberg writer records column stats into its manifest at commit
-        time instead of re-scanning the data it wrote. Returns None when any
-        file lacks usable stats (caller falls back to a Spark aggregation
-        job over the cached frame).
+        """Per-partition ``{pval: {"_n": rows, "_wm": max, "_lo": min}}``
+        read from the parquet FOOTERS of the partitions' files —
+        metadata-only, the way an Iceberg writer records column stats into
+        its manifest at commit time instead of re-scanning the data it
+        wrote. Returns None when any file lacks usable stats (callers fall
+        back: ``_write`` to a Spark aggregation job over the cached frame,
+        retention to rewriting every candidate partition).
 
-        Watermarks are accepted only for int/timestamp columns: parquet
-        string min/max may be TRUNCATED bounds (not the true max), and
-        float stats are unreliable in the presence of NaN."""
+        Bounds are accepted only for int/timestamp columns: parquet string
+        min/max may be TRUNCATED bounds (not the true extremes), and float
+        stats are unreliable in the presence of NaN."""
         import datetime
         import glob as _glob
 
@@ -345,11 +345,20 @@ class KeyedTable:
         except ImportError:  # pragma: no cover - pyarrow is baked in
             return None
 
+        def exact(v):
+            if isinstance(v, datetime.datetime):
+                if v.tzinfo is not None:  # arrow returns tz-aware UTC
+                    v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+                return v
+            if not isinstance(v, int) or isinstance(v, bool):
+                return None  # str/bytes/float: bounds, not extremes
+            return v
+
         def one_part(dirname):
             files = _glob.glob(os.path.join(data_dir, dirname, "*.parquet"))
             if not files:
                 return None
-            n, wm = 0, None
+            n, wm, lo = 0, None, None
             for f in files:
                 md = pq.ParquetFile(f).metadata
                 n += md.num_rows
@@ -363,17 +372,14 @@ class KeyedTable:
                             break
                     if st is None or not st.has_min_max:
                         return None
-                    v = st.max
-                    if isinstance(v, datetime.datetime):
-                        if v.tzinfo is not None:  # arrow returns tz-aware UTC
-                            v = v.astimezone(datetime.timezone.utc).replace(
-                                tzinfo=None)
-                    elif not isinstance(v, int) or isinstance(v, bool):
-                        return None  # str/bytes/float: bounds, not maxima
-                    wm = v if wm is None or v > wm else wm
+                    hi, mn = exact(st.max), exact(st.min)
+                    if hi is None or mn is None:
+                        return None
+                    wm = hi if wm is None or hi > wm else wm
+                    lo = mn if lo is None or mn < lo else lo
             if watermark_col is not None and wm is None:
                 return None  # no row group carried stats for the column
-            return {"_n": n, "_wm": wm}
+            return {"_n": n, "_wm": wm, "_lo": lo}
 
         # footer parsing releases the GIL in pyarrow — a thread pool keeps
         # this O(partitions) driver step flat for ~1000-partition merges

@@ -176,7 +176,6 @@ def run_config(zpath: str, seq_path: str, cpus: int, runs: int) -> dict:
         "--cpus", str(cpus),
         "--warmup", "1",
         "--repeat", str(runs),
-        "--profile-stages",
     ], cpus)
     shutil.rmtree(out, ignore_errors=True)
     walls = res["walls"]

@@ -1,9 +1,12 @@
 """Retention: telescoping age-out of fine tiers with atomic snapshots."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from hastl_spark.plans.retention import apply_retention, run_retention
+from hastl_spark.plans.retention import (apply_chunk_retention, apply_retention,
+                                         run_retention)
 from hastl_spark.plans.rollup_job import run_pipeline
 from hastl_spark.sources.sequences import generate_scale
 from hastl_spark.sources.tables import KeyedTable
@@ -58,7 +61,7 @@ def test_day_pruned_retention_touches_only_boundary_day(spark, tmp_path):
 
     # keep 36h: horizon = 2026-03-05 23:59, cutoff = 2026-03-04 11:59
     rec = apply_retention(spark, t, keep_seconds=36 * 3600)
-    assert rec["op"] == "retention_day_pruned"
+    assert rec["op"] == "retention"
     man2 = t._load()
     days = sorted(p.split(PART_SEP)[-1] for p in man2["partitions"])
     assert days == ["2026-03-04", "2026-03-05"]
@@ -84,7 +87,6 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
     import pandas as pd
 
     from hastl_spark.operators.chunks import gorilla_chunks
-    from hastl_spark.plans.retention import apply_chunk_retention
     from hastl_spark.sources.tables import CHUNK_SPEC, PART_SEP
 
     # 3 months of hourly points in one-day chunks (encoded per-month so
@@ -131,3 +133,103 @@ def test_chunk_retention_drops_aged_partitions_metadata_only(spark, tmp_path):
     # the March partition was untouched (wholly newer than the cutoff)
     p_mar = f"s1{PART_SEP}1m{PART_SEP}2026-03"
     assert man2["partitions"][p_mar] == man1["partitions"][p_mar]
+
+
+def _snapshot_dirs(t):
+    return sorted(os.listdir(os.path.join(t.path, "data")))
+
+
+def _chunk_table_with_newest_chunks(spark, tmp_path):
+    """One chunk per (source, tier), each ending at the table's horizon;
+    a 1-day policy puts the cutoff inside the chunks' month."""
+    import pandas as pd
+
+    from hastl_spark.operators.chunks import gorilla_chunks
+    from hastl_spark.sources.tables import CHUNK_SPEC
+
+    pdf = pd.DataFrame({
+        "source": ["s1"] * 25 + ["s2"] * 25,
+        "bucket": list(pd.date_range("2026-01-02", periods=25,
+                                     freq="3600s")) * 2,
+        "sum_n_tok": 5.0})
+    ch = gorilla_chunks(spark.createDataFrame(pdf), "sum_n_tok",
+                        chunk_seconds=7 * 86400)
+    ch = ch.withColumn("tier", F.lit("1m")).unionByName(
+        ch.withColumn("tier", F.lit("1h")))
+    t = KeyedTable(str(tmp_path / "chunks"), ["source", "tier", "chunk_start"],
+                   part_spec=CHUNK_SPEC)
+    t.merge_upsert(spark, ch, watermark_col="chunk_end",
+                   replace_partitions=True)
+    assert t.read(spark).count() == 4
+    return t, lambda: apply_chunk_retention(
+        spark, t, {"1m": 86400, "1h": 86400, "1d": None})
+
+
+def _day_table_starting_at_cutoff(spark, tmp_path):
+    """Two days of hourly rows; a 47h policy puts the cutoff exactly at the
+    older day's midnight, so the cutoff day loses no row."""
+    import pandas as pd
+
+    from hastl_spark.sources.tables import DAY_SPEC
+
+    pdf = pd.DataFrame({
+        "source": "s1",
+        "bucket": pd.date_range("2026-03-04", periods=48, freq="3600s"),
+        "cnt": 1, "sum_n_tok": 7})
+    t = KeyedTable(str(tmp_path / "t"), ["source", "bucket"],
+                   part_spec=DAY_SPEC)
+    t.merge_upsert(spark, spark.createDataFrame(pdf), watermark_col="bucket")
+    return t, lambda: apply_retention(spark, t, keep_seconds=47 * 3600)
+
+
+@pytest.mark.parametrize("build", [_chunk_table_with_newest_chunks,
+                                   _day_table_starting_at_cutoff],
+                         ids=["chunk", "day"])
+def test_boundary_partitions_that_lose_no_row_are_left_alone(spark, tmp_path,
+                                                             build):
+    """A partition at the cutoff whose oldest row is at or after it loses
+    nothing, so retention must neither rewrite nor drop it: no new
+    snapshot, no new data dir."""
+    t, retain = build(spark, tmp_path)
+    snap, dirs = t.snapshot(), _snapshot_dirs(t)
+    rec = retain()
+    assert rec["rewritten_partitions"] == []
+    assert rec["dropped_partitions"] == 0
+    assert t.snapshot() == snap
+    assert _snapshot_dirs(t) == dirs
+
+
+def test_source_partitioned_retention_drops_skips_and_rewrites(spark,
+                                                               tmp_path):
+    """A table partitioned by source only (the tier_1d layout, no
+    part_spec) ages out by the same rule: an all-aged partition is dropped
+    without a rewrite, a partition with no aged row keeps its data dir, and
+    only the mixed partition is rewritten."""
+    import pandas as pd
+
+    days = lambda start, n: pd.date_range(start, periods=n, freq="1D")
+    pdf = pd.concat([
+        pd.DataFrame({"source": "old", "bucket": days("2026-01-01", 5)}),
+        pd.DataFrame({"source": "new", "bucket": days("2026-01-20", 6)}),
+        pd.DataFrame({"source": "mixed", "bucket": days("2026-01-08", 18)}),
+    ], ignore_index=True).assign(cnt=1, sum_n_tok=3)
+    t = KeyedTable(str(tmp_path / "tier_1d"), ["source", "bucket"])
+    t.merge_upsert(spark, spark.createDataFrame(pdf), watermark_col="bucket")
+    man1 = t._load()
+    assert sorted(man1["partitions"]) == ["mixed", "new", "old"]
+
+    # horizon 2026-01-25 -> cutoff 2026-01-15
+    rec = apply_retention(spark, t, keep_seconds=10 * 86400)
+    cutoff = pd.Timestamp("2026-01-15")
+    assert rec["op"] == "retention"
+    assert isinstance(rec["dropped_partitions"], int)
+    assert rec["dropped_partitions"] == 1
+    assert rec["rewritten_partitions"] == ["mixed"]
+    man2 = t._load()
+    assert "old" not in man2["partitions"]
+    assert man2["partitions"]["new"] == man1["partitions"]["new"]
+    assert man2["partitions"]["mixed"] != man1["partitions"]["mixed"]
+    got = sorted((r["source"], r["bucket"]) for r in t.read(spark).collect())
+    exp = sorted((s, b.to_pydatetime()) for s, b in
+                 zip(pdf.source, pdf.bucket) if b >= cutoff)
+    assert got == exp
