@@ -18,6 +18,12 @@ metadata alone:
 Both publish through the atomic-manifest machinery of MERGE — readers see
 pre- or post-retention state, never a mix; the lineage records what was
 dropped.
+
+``run_retention`` ends with one reclaim step: ``KeyedTable.vacuum()`` on
+every table under ``out_dir``, keep-forever tiers included. It deletes the
+data dirs the age-out and earlier merges superseded and strips the
+expired lineage records' maps, so stored bytes track the live data, not
+the number of commits.
 """
 
 from __future__ import annotations
@@ -178,4 +184,8 @@ def run_retention(spark: SparkSession, out_dir: str,
                        "1d": policy.get("tier_1d"),
                        "gapfill_1m": policy.get("gapfill_1m")}
         results["chunks"] = apply_chunk_retention(spark, chunk_table, tier_policy)
+    for name in sorted(os.listdir(out_dir)):
+        path = os.path.join(out_dir, name)
+        if os.path.isfile(os.path.join(path, "_manifest.json")):
+            KeyedTable(path, ["source", "bucket"]).vacuum()
     return results

@@ -12,7 +12,10 @@ directories with an ATOMIC JSON manifest (SURVEY.md §7 hard-part (c)):
   rows win by key), publish by ``os.replace`` of the manifest — readers see
   the old or the new snapshot, never a mix;
 * every commit appends a lineage record (snapshot, rows in/out, wall-clock,
-  watermark) — the per-partition checkpoint the north_rule requires.
+  watermark) — the per-partition checkpoint the north_rule requires. A
+  record also carries the partition map, watermark map and schema of its
+  snapshot (for time travel) until ``vacuum()`` reclaims the files it
+  superseded: after a vacuum only the last record keeps those maps.
 
 Every writer goes through the same two steps: ``_write`` is the only
 partitioned write (one ``data/sNNNNNN`` dir per snapshot, row counts and
@@ -307,8 +310,8 @@ class KeyedTable:
     def drop_partitions(self, pvals, extra_record: dict | None = None) -> dict:
         """Metadata-only partition drop: a new snapshot whose manifest no
         longer names the given partitions — no data files are read or
-        written (vacuum reclaims snapshot dirs once nothing references
-        them)."""
+        written. The dropped partitions' leaf dirs stay on disk until the
+        next ``vacuum()``."""
         t0 = time.time()
         man = self._load()
         dropped = [p for p in pvals if p in man["partitions"]]
@@ -649,26 +652,19 @@ class KeyedTable:
                 for r in self._load()["lineage"]]
 
     def read_snapshot(self, spark: SparkSession, snapshot: int) -> DataFrame:
-        """Time travel: the table content AS OF ``snapshot``. Works while
-        the snapshot's data dirs survive (``vacuum()`` reclaims dirs no
-        longer referenced by the CURRENT manifest, which ends time travel
-        to superseded snapshots — same contract as Iceberg's
-        expire_snapshots)."""
-        rec = self._lineage_record(snapshot)
-        pm = rec.get("partition_map")
-        if pm is None:
-            raise ValueError(
-                f"snapshot {snapshot} of {self.path} predates partition-map"
-                " lineage (written by an older writer) — time travel is"
-                " available for snapshots committed after the upgrade")
+        """Time travel: the table content AS OF ``snapshot``. Works until a
+        ``vacuum()`` expires the snapshot: a vacuum keeps only what the
+        CURRENT manifest names, which ends time travel to every superseded
+        snapshot (same contract as Iceberg's expire_snapshots).
+
+        Reader contract: a reader that resolved its file list from an
+        older manifest before a vacuum can lose its files, as with
+        Iceberg. The in-process pipeline never does this, because
+        ``run_retention`` (which vacuums) runs after ``run_pipeline``
+        returns."""
+        rec, pm = self._snapshot_map(snapshot, "time-travel")
         if not pm:
             raise ValueError(f"snapshot {snapshot} of {self.path} is empty")
-        missing = [rel for rel in pm.values()
-                   if not os.path.isdir(os.path.join(self.path, rel))]
-        if missing:
-            raise ValueError(
-                f"snapshot {snapshot} of {self.path} was vacuumed "
-                f"(missing dirs: {missing[:3]}...) — cannot time-travel")
         # read through the schema AS OF that snapshot (records carry it):
         # the current schema may have evolved or been reset by a later
         # overwrite, and old files misdecode under a retyped named schema
@@ -684,21 +680,7 @@ class KeyedTable:
         the partition map of ``snapshot`` (Iceberg rollback semantics — the
         history keeps moving forward, no data files are touched)."""
         t0 = time.time()
-        rec = self._lineage_record(snapshot)
-        pm = rec.get("partition_map")
-        if pm is None:
-            raise ValueError(
-                f"snapshot {snapshot} of {self.path} has no partition map —"
-                " cannot roll back to it")
-        # refuse a rollback whose data dirs were vacuumed: publishing a
-        # manifest that names deleted dirs would wedge every later read
-        # (review finding — read_snapshot had this guard, rollback did not)
-        missing = [rel for rel in pm.values()
-                   if not os.path.isdir(os.path.join(self.path, rel))]
-        if missing:
-            raise ValueError(
-                f"snapshot {snapshot} of {self.path} was vacuumed "
-                f"(missing dirs: {missing[:3]}...) — cannot roll back")
+        rec, pm = self._snapshot_map(snapshot, "roll back")
         man = self._load()
         man["partitions"] = dict(pm)
         wm = rec.get("watermark_map")
@@ -731,24 +713,74 @@ class KeyedTable:
                 f"{[r['snapshot'] for r in self._load()['lineage']]})")
         return rec
 
+    def _snapshot_map(self, snapshot: int, action: str) -> tuple[dict, dict]:
+        """``(lineage record, partition map)`` of ``snapshot``. Refuses a
+        snapshot whose data dirs a vacuum reclaimed: publishing or reading
+        a map that names deleted dirs would wedge every later read."""
+        rec = self._lineage_record(snapshot)
+        pm = rec.get("partition_map")
+        if pm is None and not rec.get("expired"):
+            raise ValueError(
+                f"snapshot {snapshot} of {self.path} predates partition-map"
+                f" lineage (written by an older writer) — cannot {action}")
+        missing = [rel for rel in (pm or {}).values()
+                   if not os.path.isdir(os.path.join(self.path, rel))]
+        if pm is None or missing:
+            gone = f"missing dirs: {missing[:3]}..." if missing else "expired"
+            raise ValueError(f"snapshot {snapshot} of {self.path} was "
+                             f"vacuumed ({gone}) — cannot {action}")
+        return rec, pm
+
     def vacuum(self) -> int:
-        """Delete data dirs no longer referenced by the manifest (superseded
-        snapshots, stage dirs older versions left behind). Safe w.r.t. the atomic
-        manifest: current readers resolved their file list from a manifest
-        that only names live dirs. A ``sNNNNNN`` dir numbered above the
-        manifest's snapshot belongs to a writer that has not published yet
-        and is kept. Returns the number of removed dirs."""
+        """The table's one reclaim step (Iceberg expire_snapshots plus
+        orphan-file removal); run_retention calls it on every table.
+
+        Files: deletes every data dir the manifest does not name — whole
+        ``sNNNNNN`` dirs none of whose partitions is live, any other
+        leftover under ``data/``, and, inside a live snapshot dir, each
+        partition leaf dir a later commit superseded or dropped (the
+        dir's ``_SUCCESS`` markers stay). A ``sNNNNNN`` dir numbered above
+        the manifest's snapshot belongs to a writer that has not published
+        yet and is kept.
+
+        Lineage: the dirs older records name are gone, so every record but
+        the last loses its partition map, watermark map and schema and is
+        marked ``expired``; its summary fields stay for ``snapshots()``.
+        The trim republishes the manifest without a new snapshot, and is
+        skipped when a commit landed during the vacuum.
+
+        Readers that resolved the current manifest are safe; see
+        ``read_snapshot`` for the contract. Returns the number of removed
+        ``data/`` entries (whole snapshot dirs and leftovers)."""
         import shutil
 
         man = self._load()
-        live = {rel.split(os.sep)[1] for rel in man["partitions"].values()}
+        rels = [rel.split(os.sep) for rel in man["partitions"].values()]
+        live_snaps = {r[1] for r in rels}
+        live_leaves = {os.sep.join(r[:3]) for r in rels}
         data_root = os.path.join(self.path, "data")
         removed = 0
         if os.path.isdir(data_root):
             for d in os.listdir(data_root):
                 m = re.fullmatch(r"s(\d+)", d)
-                if d in live or (m and int(m.group(1)) > man["snapshot"]):
+                if m and int(m.group(1)) > man["snapshot"]:
                     continue
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-                removed += 1
+                snap_dir = os.path.join(data_root, d)
+                if d not in live_snaps:
+                    shutil.rmtree(snap_dir, ignore_errors=True)
+                    removed += 1
+                    continue
+                for leaf in os.listdir(snap_dir):
+                    if (os.path.isdir(os.path.join(snap_dir, leaf)) and
+                            os.path.join("data", d, leaf) not in live_leaves):
+                        shutil.rmtree(os.path.join(snap_dir, leaf),
+                                      ignore_errors=True)
+
+        stale = [r for r in man["lineage"][:-1] if "partition_map" in r]
+        if stale and self._load()["snapshot"] == man["snapshot"]:
+            for r in stale:
+                for k in ("partition_map", "watermark_map", "schema"):
+                    r.pop(k, None)
+                r["expired"] = True
+            self._publish(man)
         return removed

@@ -4,6 +4,7 @@ produce tier tables identical to a single-shot run, and vacuum must not
 change what readers see."""
 
 import pytest
+from layout import unnamed_files
 from pyspark.sql import functions as F
 
 from hastl_spark.operators.chunks import decode_chunks_df
@@ -54,12 +55,13 @@ def test_incremental_equals_single_shot(spark, tmp_path):
         assert rows.count() > 0, table
         assert rows.exceptAll(pts).count() + pts.exceptAll(rows).count() == 0, table
 
-    # vacuum removes superseded snapshots without changing visible rows
-    t = KeyedTable(f"{incr}/tier_1m", ["source", "bucket"])
-    before = t.read(spark).count()
-    removed = t.vacuum()
-    assert t.read(spark).count() == before
-    assert removed >= 0
+    # vacuum removes every superseded file without changing visible rows
+    for name in ("tier_1m", "gapfill_1m", "tier_1h", "tier_1d", "chunks"):
+        t = KeyedTable(f"{incr}/{name}", ["source", "bucket"])
+        before = t.read(spark).count()
+        t.vacuum()
+        assert t.read(spark).count() == before, name
+        assert unnamed_files(t) == [], name
 
 
 @pytest.mark.slow

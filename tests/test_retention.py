@@ -3,6 +3,7 @@
 import os
 
 import pytest
+from layout import unnamed_files
 from pyspark.sql import functions as F
 
 from hastl_spark.plans.retention import (apply_chunk_retention, apply_retention,
@@ -233,3 +234,38 @@ def test_source_partitioned_retention_drops_skips_and_rewrites(spark,
     exp = sorted((s, b.to_pydatetime()) for s, b in
                  zip(pdf.source, pdf.bucket) if b >= cutoff)
     assert got == exp
+
+
+def test_run_retention_reclaims_every_table(spark, tmp_path):
+    """After run_retention no table holds a parquet file its manifest does
+    not name — keep-forever tiers included — and the result keeps one
+    record per aged table."""
+    import pandas as pd
+
+    from hastl_spark.sources.tables import DAY_SPEC
+
+    out = tmp_path / "tiers"
+    pdf = pd.DataFrame({
+        "source": "s1",
+        "bucket": pd.date_range("2026-03-01", periods=72, freq="3600s"),
+        "cnt": 1, "sum_n_tok": 7})
+    tables = {"tier_1m": KeyedTable(str(out / "tier_1m"), ["source", "bucket"],
+                                    part_spec=DAY_SPEC),
+              "tier_1d": KeyedTable(str(out / "tier_1d"), ["source", "bucket"])}
+    for t in tables.values():
+        t.merge_upsert(spark, spark.createDataFrame(pdf), watermark_col="bucket")
+        # a second merge supersedes the newest day's (or source's) files
+        t.merge_upsert(spark, spark.createDataFrame(pdf.tail(3)),
+                       watermark_col="bucket")
+    counts = {n: t.read(spark).count() for n, t in tables.items()}
+
+    res = run_retention(spark, str(out), {"tier_1m": 36 * 3600,
+                                          "tier_1d": None})
+    assert set(res) == {"tier_1m"}
+    for rec in res.values():
+        assert isinstance(rec, dict)
+        assert {"dropped_partitions", "rewritten_partitions"} <= set(rec)
+    for name, t in tables.items():
+        assert unnamed_files(t) == [], name
+    assert tables["tier_1d"].read(spark).count() == counts["tier_1d"]
+    assert tables["tier_1m"].read(spark).count() == 37  # cutoff row onwards

@@ -2,11 +2,12 @@
 snapshot-read / rollback / expire_snapshots parity)."""
 
 import os
+import shutil
 
 import pytest
-from pyspark.sql import functions as F
+from layout import unnamed_files
 
-from hastl_spark.sources.tables import KeyedTable
+from hastl_spark.sources.tables import DAY_SPEC, KeyedTable
 
 
 def _df(spark, rows):
@@ -110,6 +111,83 @@ def test_vacuum_keeps_unpublished_writer_dir(spark, table):
     assert t.vacuum() == 2
     assert sorted(os.listdir(data)) == ["s000002", "s000003"]
     assert _content(t.read(spark)) == {("a", 1, 99)}
+
+
+def test_vacuum_reclaims_superseded_leaf_in_live_snapshot_dir(spark,
+                                                              tmp_path):
+    """A merge that rewrites one of two days supersedes that day's leaf
+    dir inside a snapshot dir whose other day is still live: vacuum must
+    delete the superseded leaf and keep its live sibling and their dir."""
+    import datetime
+
+    day = lambda d, h: datetime.datetime(2026, 3, d, h)
+    t = KeyedTable(str(tmp_path / "days"), ["source", "bucket"],
+                   part_spec=DAY_SPEC)
+    schema = "source string, bucket timestamp, v long"
+    t.merge_upsert(spark, spark.createDataFrame(
+        [("a", day(1, 5), 1), ("a", day(2, 5), 2)], schema),
+        watermark_col="bucket")
+    first = t._load()["partitions"]
+    t.merge_upsert(spark, spark.createDataFrame(
+        [("a", day(2, 6), 3)], schema), watermark_col="bucket")
+    live = t._load()["partitions"]
+    old_day, kept_day = first["a~2026-03-02"], first["a~2026-03-01"]
+    assert live["a~2026-03-02"] != old_day
+    assert live["a~2026-03-01"] == kept_day
+    before = _content(t.read(spark))
+
+    assert t.vacuum() == 0  # no whole snapshot dir is dead
+    assert not os.path.exists(os.path.join(t.path, old_day))
+    assert os.path.isdir(os.path.join(t.path, kept_day))
+    assert os.path.isfile(os.path.join(t.path, "data", "s000001", "_SUCCESS"))
+    assert unnamed_files(t) == []
+    assert _content(t.read(spark)) == before
+
+
+def test_vacuum_expires_lineage_maps_without_a_snapshot(spark, table):
+    """vacuum strips the maps of every lineage record but the last:
+    expired snapshots refuse time travel with the vacuumed error, the
+    history still lists them, the snapshot id does not move and the
+    manifest shrinks."""
+    t = table
+    t.merge_upsert(spark, _df(spark, [("a", 1, 10), ("b", 1, 20)]))
+    t.merge_upsert(spark, _df(spark, [("a", 1, 11)]))
+    t.overwrite(spark, _df(spark, [("a", 1, 99)]))
+    size = os.path.getsize(t._manifest_path)
+    history = t.snapshots()
+    t.vacuum()
+    assert t.snapshot() == 3
+    assert t.snapshots() == history
+    assert [(s["snapshot"], s["op"]) for s in history] == [
+        (1, "merge_upsert"), (2, "merge_upsert"), (3, "overwrite")]
+    assert os.path.getsize(t._manifest_path) < size
+    for call in (lambda: t.read_snapshot(spark, 1), lambda: t.rollback(1)):
+        with pytest.raises(ValueError, match="was vacuumed"):
+            call()
+    assert _content(t.read_snapshot(spark, 3)) == {("a", 1, 99)}
+
+
+def test_commit_landing_mid_vacuum_survives(spark, table, monkeypatch):
+    """A merge that publishes while vacuum is deleting files must stay in
+    the manifest: the lineage trim is skipped, not published over it."""
+    t = table
+    t.merge_upsert(spark, _df(spark, [("a", 1, 10)]))
+    t.overwrite(spark, _df(spark, [("a", 1, 99)]))
+    rmtree, merged = shutil.rmtree, []
+
+    def merge_then_rmtree(*args, **kwargs):
+        if not merged:
+            merged.append(t.merge_upsert(spark, _df(spark, [("c", 1, 30)])))
+        return rmtree(*args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", merge_then_rmtree)
+    t.vacuum()
+    assert merged
+    man = t._load()
+    assert man["snapshot"] == merged[0]["snapshot"] == 3
+    assert "c" in man["partitions"]
+    assert man["lineage"][-1]["snapshot"] == 3
+    assert _content(t.read(spark)) == {("a", 1, 99), ("c", 1, 30)}
 
 
 def test_crash_before_publish_leaves_table_unchanged(spark, table, tmp_path,
