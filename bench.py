@@ -27,11 +27,10 @@ The FULL record (medians, per-repeat walls, pipeline/packing detail,
 efficiency provenance) is written to BENCH/bench_full.json.
 
 The `efficiency` field is the north_rule's N->4N scaling-efficiency
-number. Measuring it takes two spark-submit jobs over the 56M-row scaling
-input (~10 min), so by default the LAST recorded measurement
-(BENCH/scaling_last.json, written by scripts/scaling_bench.py) is embedded
-with its timestamp/protocol; set SPARK_GRAFT_SCALING=1 to re-measure
-inline (one paired local[2]/local[8] run).
+number. It is not measured here: measuring it takes alternating taskset
+pairs of perfbench runs (about 20 min), so the last record
+(BENCH/scaling_last.json, written by scripts/scaling_bench.py) is embedded,
+with its `measured_at`, `protocol` and core counts under `efficiency_meta`.
 """
 
 from __future__ import annotations
@@ -40,7 +39,6 @@ import json
 import os
 import shutil
 import statistics
-import subprocess
 import sys
 import time
 
@@ -71,31 +69,17 @@ PIPELINE_SCALE = os.environ.get("SPARK_GRAFT_PIPE_SCALE", "small")
 ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
-def load_or_measure_efficiency() -> dict | None:
-    """north_rule scaling efficiency: measure inline when asked, else embed
-    the latest recorded measurement with provenance."""
-    if os.environ.get("SPARK_GRAFT_SCALING"):
-        runs = os.environ.get("SPARK_GRAFT_SCALING_RUNS", "1")
-        subprocess.run(
-            [sys.executable, os.path.join(ROOT, "scripts", "scaling_bench.py"),
-             "--paired", "--runs", runs, "--low", "2", "--high", "8"],
-            capture_output=True, text=True, timeout=7200, check=True)
+def load_efficiency() -> dict | None:
+    """The last recorded scaling efficiency with its provenance, or None."""
     p = os.path.join(ROOT, "BENCH", "scaling_last.json")
     if not os.path.exists(p):
         return None
     with open(p) as f:
         sl = json.load(f)
-    return {
-        "value": sl.get("scaling_efficiency"),
-        "low_cpus": sl.get("low_cpus"),
-        "high_cpus": sl.get("high_cpus"),
-        "scale": sl.get("scale"),
-        "protocol": sl.get("protocol", "sequential-min"),
-        "hardware_ceiling": sl.get("hardware_ceiling"),
-        "membw_ceiling": sl.get("membw_ceiling"),
-        "efficiency_best_pair": sl.get("efficiency_best_pair"),
-        "measured_at": sl.get("measured_at"),
-    }
+    meta = ("low_cpus", "high_cpus", "workload", "protocol", "nproc",
+            "measured_at")
+    return {"value": sl["scaling_efficiency"],
+            **{k: sl[k] for k in meta if k in sl}}
 
 
 def main():
@@ -186,7 +170,7 @@ def main():
     pack_wall = min(pack_walls)
     assert int(tokens_packed) == int(tokens_scanned), "packing lost tokens"
 
-    eff = load_or_measure_efficiency()
+    eff = load_efficiency()
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline_queries_total_wall",

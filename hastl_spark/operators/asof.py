@@ -3,8 +3,9 @@
 Spark has no native ASOF JOIN (DuckDB/Pandas do); the naive formulation —
 an inequality join + per-left-row rank — degenerates to a broadcast
 nested-loop or an exploding theta-join.  Three plans, one semantics (all
-row-identical by test; scale numbers in BENCH/asof_scale.json) — two
-union-merge window variants plus a zero-shuffle broadcast fast path
+row-identical by test; BENCH/asof_scale.json holds historical scale
+numbers from 2026-08 runs on another host) — two union-merge window
+variants plus a zero-shuffle broadcast fast path
 (``asof_join_broadcast``, defined below, for small right sides):
 
 ``asof_join`` (per-key window):

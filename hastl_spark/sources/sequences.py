@@ -133,13 +133,6 @@ SCALES = {
     "tiny": (4, 2000, 16.0, 64, 2048),
     "small": (16, 5000, 96.0, 16, 128),
     "medium": (16, 20000, 128.0, 16, 128),
-    # scaling-efficiency input: enough series (64) that grouped-map stages
-    # keep every core busy at local[32], and enough rows (~56M) that the
-    # scan+aggregate dominates fixed overhead
-    "scaling": (64, 10000, 512.0, 16, 128),
-    # ~320M rows: compute must dominate fixed per-job latency for the
-    # scaling-efficiency measurement to mean anything
-    "xl": (64, 20000, 768.0, 8, 24),
     # ~1.0e9 rows (~38 GB parquet): the 10^9-row tokenized-sequence table
     # named by the baseline metric, for a single-node throughput headline
     "b1": (64, 30000, 1536.0, 8, 24),

@@ -452,9 +452,9 @@ class KeyedTable:
         the record as ``record["data"]`` (caller unpersists). When the merge
         touched every partition (``record["covers_table"]``), that cached
         frame IS the table content — downstream stages can consume it
-        instead of re-listing and re-decoding hundreds of freshly written
-        partition files (a fixed serial cost that hurts small-cluster
-        scaling)."""
+        instead of re-listing and re-decoding the freshly written partition
+        files. On a 4-core host (2026-10-20) reading every tier back instead
+        made a full ``tier_build`` op 17% slower."""
         t0 = time.time()
         man = self._load()
         pc = self.partition_col

@@ -30,10 +30,10 @@ def _seqs(spark, n_days=3):
                               with_tokens=True).cache()
 
 
-def _split_at_day(seqs, day):
-    """(the input before ``day``, the input from ``day`` on)."""
+def _split_at_bucket(seqs, bucket):
+    """(the input before ``bucket``, the input from ``bucket`` on)."""
     seq_no = F.split(F.col("doc_id"), "-").getItem(1).cast("long")
-    early = (seq_no / SEQS_PER_BUCKET).cast("long") < day * 1440
+    early = (seq_no / SEQS_PER_BUCKET).cast("long") < bucket
     return seqs.filter(early), seqs.filter(~early)
 
 
@@ -90,7 +90,7 @@ def test_pipeline_sizes_chunked_gapfill_by_group_count(spark, tmp_path,
     monkeypatch.setattr(rollup_job, "stl_gapfill", spy)
     seqs = _seqs(spark)
     out = str(tmp_path / "t")
-    for s in _split_at_day(seqs, 2):
+    for s in _split_at_bucket(seqs, 2 * 1440):
         run_pipeline(spark, s, out, check_invariant=False,
                      stl_kwargs=STL_KW, incremental_gapfill=True)
     (full_keys, full_only), (inc_keys, inc_only) = seen
@@ -112,7 +112,7 @@ def test_single_encode_stage_matches_per_tier_chunks(spark, tmp_path,
     incremental = build == "incremental"
     seqs = _seqs(spark)
     out = str(tmp_path / build)
-    runs = _split_at_day(seqs, 2) if incremental else [seqs]
+    runs = _split_at_bucket(seqs, 2 * 1440) if incremental else [seqs]
     for s in runs:
         run_pipeline(spark, s, out, check_invariant=False, stl_kwargs=STL_KW,
                      incremental_gapfill=incremental, chunk_seconds=ANCHORED)
@@ -138,6 +138,21 @@ def _completed_tasks(sc, group):
                if st.getStageInfo(s) is not None)
 
 
+def _build_in_group(spark, group, build):
+    """Run ``build()`` under job group ``group``; assert that it left no
+    cached frame and ran no job outside the group."""
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "pipeline build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+
+
 @pytest.mark.slow
 def test_pipeline_releases_every_cached_frame(spark, tmp_path):
     """run_pipeline leaves the session's cache empty, so a second build of
@@ -145,21 +160,46 @@ def test_pipeline_releases_every_cached_frame(spark, tmp_path):
     gap-fill result would be served in place of the STL UDF). Every job it
     runs, the overlapped cascade thread's included, lands in the caller's
     job group."""
-    sc = spark.sparkContext
-    cache = spark._jsparkSession.sharedState().cacheManager()
     seqs = generate_scale(spark, "xs")
     spark.catalog.clearCache()
     tasks = []
     for i in range(2):
         group = f"rebuild-{i}-{tmp_path.name}"
-        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
-        sc.setJobGroup(group, "same-input build")
-        try:
-            run_pipeline(spark, seqs, str(tmp_path / f"b{i}"))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert cache.isEmpty()
-        assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
-        tasks.append(_completed_tasks(sc, group))
+        _build_in_group(spark, group,
+                        lambda: run_pipeline(spark, seqs, str(tmp_path / f"b{i}")))
+        tasks.append(_completed_tasks(spark.sparkContext, group))
     assert tasks[1] == tasks[0] > 0
+
+
+@pytest.mark.slow
+def test_incremental_append_releases_every_cached_frame(spark, tmp_path,
+                                                        monkeypatch):
+    """The perfbench tier_maintain shape: a chunked base build over a day
+    and an hour, then one appended hour with incremental gap-fill. The
+    append's 1m merge touches only day 1, so it takes the release-and-read
+    path, while its 1h/1d key-merges cover their tables and hand their
+    cached frames downstream. Either way the cache ends empty and every
+    job lands in the caller's job group."""
+    covers = {}
+    merge = KeyedTable.merge_upsert
+
+    def spy(self, *a, **kw):
+        rec = merge(self, *a, **kw)
+        if kw.get("keep_data"):
+            covers[self.path.rsplit("/", 1)[-1]] = rec["covers_table"]
+        return rec
+
+    monkeypatch.setattr(KeyedTable, "merge_upsert", spy)
+    seqs = generate_sequences(spark, n_sources=4, n_buckets=1560,
+                              base_rate=8.0, tok_lo=16, tok_hi=64,
+                              with_tokens=True)
+    base, rest = _split_at_bucket(seqs, 1500)
+    out = str(tmp_path / "t")
+    kw = dict(stl_kwargs={"chunk_buckets": 1440}, incremental_gapfill=True)
+    spark.catalog.clearCache()
+    for name, part in (("base", base), ("append", rest)):
+        covers.clear()
+        _build_in_group(spark, f"{name}-{tmp_path.name}",
+                        lambda: run_pipeline(spark, part, out, **kw))
+    assert covers["tier_1m"] is False
+    assert covers["tier_1h"] is True and covers["tier_1d"] is True
