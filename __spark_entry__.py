@@ -29,16 +29,15 @@ from hastl_spark.operators.text import lang_guess, quality_score, with_text_stat
 # ---------------------------------------------------------------- helpers
 
 
-_SCAN_PAR_CACHE: dict[tuple[str, int], tuple[int, int]] = {}
+_SCAN_PAR_CACHE: dict[tuple[str, int], int] = {}
 
 
-def _scan_layout(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(effective scan tasks, total rows) of a parquet path. Spark assigns
-    a row group to the byte split holding its midpoint, so the number of
-    tasks that actually receive rows is min(byte splits, total row
-    groups). The driver testdata ships each table as ONE file with ONE
-    row group, which makes every scan stage a single task no matter the
-    core count."""
+def _scan_layout(spark: SparkSession, path: str) -> int:
+    """Effective scan tasks of a parquet path. Spark assigns a row group
+    to the byte split holding its midpoint, so the number of tasks that
+    actually receive rows is min(byte splits, total row groups). The
+    driver testdata ships each table as ONE file with ONE row group, which
+    makes every scan stage a single task no matter the core count."""
     import os
 
     files = []
@@ -49,16 +48,12 @@ def _scan_layout(spark: SparkSession, path: str) -> tuple[int, int]:
     elif os.path.isfile(path):
         files = [path]
     else:
-        return (1 << 30, 0)  # non-local layout: assume healthy, change nothing
+        return 1 << 30  # non-local layout: assume healthy, change nothing
     try:
         import pyarrow.parquet as pq
-        groups = rows = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            groups += md.num_row_groups
-            rows += md.num_rows
+        groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
     except Exception:
-        groups, rows = len(files), 0
+        groups = len(files)
     # byte splits: Spark's own formula (maxSplitBytes = min(maxPartitionBytes,
     # max(openCostInBytes, totalBytes/defaultParallelism))). getsize guarded
     # like the footer reads: a file vanishing between os.walk and here (e.g.
@@ -67,11 +62,11 @@ def _scan_layout(spark: SparkSession, path: str) -> tuple[int, int]:
     try:
         total = sum(os.path.getsize(f) for f in files)
     except OSError:
-        return (1 << 30, 0)
+        return 1 << 30
     par = spark.sparkContext.defaultParallelism
     max_split = min(128 << 20, max(4 << 20, total // max(par, 1)))
     splits = max(1, -(-total // max_split))
-    return (min(splits, groups), rows)
+    return min(splits, groups)
 
 
 def _read_par(spark: SparkSession, path: str) -> DataFrame:
@@ -90,60 +85,18 @@ def _read_par(spark: SparkSession, path: str) -> DataFrame:
     (PushedFilters/ReadSchema verified in plans/r06/)."""
     df = spark.read.parquet(path)
     par = spark.sparkContext.defaultParallelism
-    eff, _ = _scan_layout_cached(spark, path)
-    if eff < par:
+    if _scan_layout_cached(spark, path) < par:
         df = df.repartition(par)
     return df
 
 
-def _scan_layout_cached(spark: SparkSession, path: str) -> tuple[int, int]:
+def _scan_layout_cached(spark: SparkSession, path: str) -> int:
     key = (path, spark.sparkContext.defaultParallelism)
     v = _SCAN_PAR_CACHE.get(key)
     if v is None:
         v = _scan_layout(spark, path)
         _SCAN_PAR_CACHE[key] = v
     return v
-
-
-# Sliced-scan thresholds (module constants so tests can exercise the
-# sliced path on tiny fixtures): slice when a degenerate layout would
-# push >= _SLICE_MIN_ROWS rows through one scan task; each slice handles
-# ~_SLICE_TARGET_ROWS, capped at _SLICE_MAX slices (beyond that the
-# n-fold re-decompress saturates memory bandwidth — measured: 8 slices
-# beat 16 and 32 at 4M rows).
-_SLICE_MIN_ROWS = 2_000_000
-_SLICE_TARGET_ROWS = 500_000
-_SLICE_MAX = 8
-
-
-def _read_sliced(spark: SparkSession, path: str, id_col: str) -> DataFrame:
-    """Read parquet; when the layout is degenerate (fewer effective scan
-    tasks than cores) AND the serial scan would carry >= _SLICE_MIN_ROWS
-    rows per task, return a UNION of n disjoint hash slices of the same
-    file (`pmod(xxhash64(id), n) = i`). Each slice re-reads and
-    re-decompresses the whole row group — n-fold IO — but the n scans run
-    in parallel and, unlike a round-robin repartition, there is NO extra
-    exchange, so map-side partial aggregation and the query's own key
-    exchange keep their shape. A/B at 4M-row single-row-group events:
-    counter 2.7->1.8s, sessions 2.1->1.4s, time_weighted 2.8->1.6s,
-    ohlc 3.1->1.6s with 8 slices; a wash at 1M rows (threshold sits
-    above it) and strictly never triggered on a healthy multi-row-group
-    layout, where the plain scan already parallelizes (100-TB shape).
-    Row partition is exact (xxhash64 is deterministic, slices are
-    disjoint-exhaustive), so results are identical — pinned by test."""
-    par = spark.sparkContext.defaultParallelism
-    eff, rows = _scan_layout_cached(spark, path)
-    if not (eff < par and rows and rows // eff >= _SLICE_MIN_ROWS):
-        return spark.read.parquet(path)
-    import functools
-
-    n = int(min(_SLICE_MAX, max(2, rows // _SLICE_TARGET_ROWS)))
-    parts = [
-        spark.read.parquet(path).filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n)) == i)
-        for i in range(n)
-    ]
-    return functools.reduce(lambda a, b: a.unionAll(b), parts)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,10 +107,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-confirmed at 4M rows — the floor loses at every size here).
     # The doc/embedding scans keep the floor because their per-row work is
     # amplified ~1000x by explodes/regex/matmul before anything shuffles.
-    # _read_sliced instead guards the ESCALATED degenerate case (>= 2M
-    # rows through one scan task): disjoint hash-slice re-reads with no
-    # extra exchange — a no-op at every currently shipped sf.
-    return _read_sliced(spark, f"{sf_dir}/events.parquet", "event_id")
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _scratch_index_dir(name: str, sf_dir: str) -> str:
@@ -276,7 +226,7 @@ def q_sessions(spark, sf_dir):
 
 
 def q_lineitem_pricing(spark, sf_dir):
-    li = _read_sliced(spark, f"{sf_dir}/lineitem.parquet", "l_orderkey")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -291,8 +241,8 @@ def q_lineitem_pricing(spark, sf_dir):
 
 
 def q_revenue_by_nation(spark, sf_dir):
-    cust = _read_sliced(spark, f"{sf_dir}/customer.parquet", "c_custkey")
-    orders = _read_sliced(spark, f"{sf_dir}/orders.parquet", "o_orderkey")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")  # 25 rows
     return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
@@ -788,28 +738,6 @@ def q_asof_enrich(spark, sf_dir):
                       F.col("matched_bucket_end"))
 
 
-def q_asof_enrich_bucketed(spark, sf_dir):
-    """Skew-safe variant of asof_enrich: same semantics through the
-    (key, time-bucket) window + carry-row plan (one hot key no longer
-    pins one task — measured 5.2x on a 306M-row skewed source). Shares
-    asof_enrich's oracle, so the driver gate value-checks the
-    equivalence."""
-    from hastl_spark.operators.asof import asof_join_bucketed
-
-    ev = _events(spark, sf_dir).select("event_id", "event_type", "ts")
-    r = (
-        _events(spark, sf_dir)
-        .groupBy("event_type",
-                 (F.date_trunc("hour", "ts") + F.expr("INTERVAL 1 HOUR")).alias("bucket_end"))
-        .agg(F.count(F.lit(1)).alias("prev_cnt"))
-    )
-    out = asof_join_bucketed(ev, r, by="event_type", left_on="ts",
-                             right_on="bucket_end", bucket_seconds=86400,
-                             direction="backward")
-    return out.select("event_id", "event_type", "ts", "prev_cnt",
-                      F.col("matched_bucket_end"))
-
-
 def q_range_busy(spark, sf_dir):
     """Range (interval-containment) join via the bucket-explode plan:
     events counted against each event_type's 3 busiest hours widened to
@@ -1105,7 +1033,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_tokens": q_pack_tokens,
         "mixture_sample": q_mixture_sample,
         "asof_enrich": q_asof_enrich,
-        "asof_enrich_bucketed": q_asof_enrich_bucketed,
         "range_busy": q_range_busy,
         "kmv_users": q_kmv_users,
         "time_weighted": q_time_weighted,
@@ -1821,9 +1748,6 @@ def oracle_sql() -> dict[str, str]:
             ) WHERE rk = 1
         """,
     }
-    # same oracle: the bucketed plan must be row-identical to the plain one
-    d["asof_enrich_bucketed"] = d["asof_enrich"]
-
     d["range_busy"] = """
         WITH r AS (
           SELECT event_type, date_trunc('hour', ts) AS bucket, count(*) AS cnt

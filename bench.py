@@ -54,7 +54,7 @@ HEADLINE = [
     "ann_topk", "ivf_topk_full",
     "media_features", "media_real_decode",
     "pack_assignments", "packs_summary", "pack_tokens", "mixture_sample",
-    "asof_enrich", "asof_enrich_bucketed", "range_busy", "kmv_users",
+    "asof_enrich", "range_busy", "kmv_users",
     "time_weighted", "value_quantiles", "ohlc_1h",
     "gapfill_locf_1h", "gapfill_linear_1h",
     "anomalies_1h", "downsample_ltob",

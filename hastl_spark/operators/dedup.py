@@ -48,7 +48,7 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 16,
     bench = char_ngrams(benchmark, n=n, text_col=text_col,
                         id_col=id_col).select("ngram").distinct()
     if broadcast:
-        # Fail-fast size guard (same discipline as asof_join_broadcast):
+        # Fail-fast size guard:
         # a "benchmark" that is actually corpus-sized would OOM every
         # executor when broadcast. Two-tier probe (r6): distinct shingles
         # are bounded above by total gram positions = sum(max(len-n+1,1)),

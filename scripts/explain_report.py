@@ -199,20 +199,6 @@ def main():
                    and len(re.findall(r"Window \(\d+\)", p)) == 1
                    and n_exch <= 2))
 
-    # 10b. broadcast as-of: the left side must never shuffle — the whole
-    # plan is scan -> ArrowEvalPython/MapInPandas -> sink, zero exchanges.
-    from hastl_spark.operators.asof import asof_join_broadcast
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    r = ev.groupBy("event_type").agg(F.max("ts").alias("bucket_end"),
-                                     F.count(F.lit(1)).alias("prev_cnt"))
-    p = plan_of(asof_join_broadcast(ev, r, by="event_type", left_on="ts",
-                                    right_on="bucket_end"))
-    sections["asof_join_broadcast (zero-shuffle map-side)"] = p
-    checks.append(("broadcast as-of never shuffles the left side",
-                   len(re.findall(r"Exchange \(\d+\)", p)) == 0
-                   and "MapInPandas" in p))
-
     # 11. round-5 analytics ops: the shuffle-shape claims in their docstrings
     # funnel: all three stages + the final agg must share ONE user exchange
     p = plan_of(entrymod.queries()["funnel"](spark, "/root/testdata/sf0.001"))

@@ -1,7 +1,8 @@
 """Per-query isolation harness (guide §1.4): times individual declared
-queries through the noop sink at $SPARK_GRAFT_SF_DIR, N repeats, and can
-dump .explain("formatted") to a file. bench.py is frozen for measurement;
-this is the iteration loop.
+queries through the noop sink at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+testdata, as in bench.py) on local[$SPARK_GRAFT_CPUS] (default: the cores
+this process may run on), N repeats, and can dump .explain("formatted") to
+a file. bench.py is frozen for measurement; this is the iteration loop.
 
 usage: python scripts/q_time.py [-n N] [--explain DIR] query [query ...]
 """
@@ -28,8 +29,9 @@ def main():
     import __spark_entry__ as entrymod
     from hastl_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     spark = get_spark(cpus, app_name="q_time")
     qs = entrymod.queries()
 

@@ -51,20 +51,6 @@ def test_overwrite_without_watermark_clears_ghosts(spark, tmp_path):
     assert t.watermark("a") is None and t.watermark("b") is None
 
 
-def test_asof_broadcast_rejects_null_right_keys(spark):
-    import datetime as dt
-
-    from hastl_spark.operators.asof import asof_join_broadcast
-
-    t0 = dt.datetime(2026, 1, 1)
-    left = spark.createDataFrame([("a", t0)], "k string, ts timestamp")
-    right = spark.createDataFrame([(None, t0, 1.0)],
-                                  "k string, ts timestamp, v double")
-    with pytest.raises(ValueError, match="NULL by-keys"):
-        asof_join_broadcast(left, right, by="k", left_on="ts",
-                            right_on="ts").collect()
-
-
 def test_fingerprint_window_guard(spark):
     from hastl_spark.operators.text import (fingerprint_portable,
                                             fingerprint_portable_np)
@@ -131,24 +117,6 @@ def test_rollback_to_schema_none_snapshot_sheds_schema(spark, tmp_path):
     t.rollback(2)
     # the rolled-back manifest must not keep snap 3's string-v schema
     assert t._load().get("schema") is None
-
-
-def test_sliced_events_read_equals_plain(spark, monkeypatch):
-    """r6 sliced-scan guard: the union of disjoint hash slices must be an
-    exact row partition of the plain read (thresholds patched low so the
-    sliced path triggers on the tiny fixture)."""
-    import __spark_entry__ as e
-
-    e._SCAN_PAR_CACHE.clear()
-    monkeypatch.setattr(e, "_SLICE_MIN_ROWS", 10)
-    monkeypatch.setattr(e, "_SLICE_TARGET_ROWS", 25)
-    path = "/root/testdata/sf0.001/events.parquet"
-    plain = spark.read.parquet(path)
-    sliced = e._read_sliced(spark, path, "event_id")
-    assert "Union" in sliced._jdf.queryExecution().optimizedPlan().toString()
-    assert sorted(map(tuple, plain.collect())) \
-        == sorted(map(tuple, sliced.collect()))
-    e._SCAN_PAR_CACHE.clear()
 
 
 @pytest.mark.parametrize("before, update, want", [

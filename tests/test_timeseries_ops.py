@@ -247,85 +247,6 @@ def test_ltob_short_series_keeps_everything(spark):
     assert len(out) == 5  # n < n_out: every point lands in its own slot
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_asof_bucketed_equals_plain(spark, direction):
-    """Bucketed (skew-safe) as-of must be row-identical to the per-key
-    window plan — small buckets force heavy carry-row usage."""
-    from hastl_spark.operators.asof import asof_join_bucketed
-
-    left, right = _mk_asof_frames(spark, seed=17, n_left=500, n_right=40)
-    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    kwargs = dict(by="key", left_on="ts", right_on="rt", direction=direction)
-    plain = asof_join(ldf, rdf, **kwargs)
-    for bs in (1000, 3600, 10**6):
-        buck = asof_join_bucketed(ldf, rdf, bucket_seconds=bs, **kwargs)
-        diff = plain.exceptAll(buck).count() + buck.exceptAll(plain).count()
-        assert diff == 0, (direction, bs)
-
-
-def test_asof_bucketed_tolerance_and_skew(spark):
-    """One key holds 90% of rows (the straggler shape) + tolerance gate."""
-    from hastl_spark.operators.asof import asof_join_bucketed
-
-    rng = np.random.default_rng(41)
-    n = 2000
-    keys = np.where(rng.random(n) < 0.9, "hot", "cold")
-    left = pd.DataFrame({
-        "key": keys,
-        "ts": [_ts(s) for s in rng.choice(10**6, n, replace=False)],
-        "ev": np.arange(n, dtype=np.int64),
-    })
-    right = pd.DataFrame({
-        "key": ["hot"] * 30 + ["cold"] * 10,
-        "rt": [_ts(s) for s in rng.choice(10**6, 40, replace=False)],
-        "payload": np.arange(40, dtype=np.int64),
-    })
-    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    kwargs = dict(by="key", left_on="ts", right_on="rt",
-                  tolerance_seconds=50_000)
-    plain = asof_join(ldf, rdf, **kwargs)
-    buck = asof_join_bucketed(ldf, rdf, bucket_seconds=25_000, **kwargs)
-    assert plain.exceptAll(buck).count() + buck.exceptAll(plain).count() == 0
-    # and against pandas directly
-    got = buck.toPandas().sort_values("ev").reset_index(drop=True)
-    exp = pd.merge_asof(
-        left.sort_values("ts"), right.sort_values("rt"),
-        left_on="ts", right_on="rt", by="key",
-        tolerance=pd.Timedelta(seconds=50_000),
-    ).sort_values("ev").reset_index(drop=True)
-    assert list(got["payload"].fillna(-1)) == list(exp["payload"].fillna(-1))
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_asof_broadcast_equals_plain(spark, direction):
-    """Zero-shuffle broadcast as-of must be row-identical to the window
-    plan, including keys absent from the right side and the tolerance
-    gate."""
-    from hastl_spark.operators.asof import asof_join_broadcast
-
-    left, right = _mk_asof_frames(spark, seed=53, n_left=500, n_right=40,
-                                  n_keys=5)
-    right = right[right["key"] != "k0"]  # k0 left rows must come back null
-    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    for tol in (None, 8000):
-        kwargs = dict(by="key", left_on="ts", right_on="rt",
-                      direction=direction, tolerance_seconds=tol)
-        plain = asof_join(ldf, rdf, **kwargs)
-        bcast = asof_join_broadcast(ldf, rdf, **kwargs)
-        diff = plain.exceptAll(bcast).count() + bcast.exceptAll(plain).count()
-        assert diff == 0, (direction, tol)
-
-
-def test_asof_broadcast_guards_right_size(spark):
-    from hastl_spark.operators.asof import asof_join_broadcast
-
-    left, right = _mk_asof_frames(spark, seed=3, n_left=20, n_right=10)
-    with pytest.raises(ValueError, match="max_right_rows"):
-        asof_join_broadcast(
-            spark.createDataFrame(left), spark.createDataFrame(right),
-            by="key", left_on="ts", right_on="rt", max_right_rows=5)
-
-
 def test_time_weighted_avg_matches_manual(spark):
     """LOCF time-weight vs a hand-computed pandas oracle, incl. an
     equal-timestamp tie (pinned by the tiebreak column) and a dropped
@@ -348,13 +269,10 @@ def test_time_weighted_avg_matches_manual(spark):
     assert out.iloc[0]["span_s"] == 300.0
 
 
-def test_asof_tolerance_subsecond_all_plans_agree(spark):
-    """Microsecond timestamps near the tolerance boundary: the window
-    plans, the broadcast plan, and pandas must keep/null the same rows
-    (unix_timestamp truncation regression)."""
-    from hastl_spark.operators.asof import (asof_join_broadcast,
-                                            asof_join_bucketed)
-
+def test_asof_tolerance_subsecond_matches_pandas(spark):
+    """Microsecond timestamps near the tolerance boundary: asof_join and
+    pandas must keep/null the same rows (unix_timestamp truncation
+    regression)."""
     left = pd.DataFrame({
         "key": ["a", "a", "a"],
         # distances to rt=10.0s: exactly 4.0s, 4.9s, 3.999999s
@@ -364,20 +282,44 @@ def test_asof_tolerance_subsecond_all_plans_agree(spark):
     })
     right = pd.DataFrame({"key": ["a"], "rt": [_ts(10)],
                           "payload": np.array([7], dtype=np.int64)})
-    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    kwargs = dict(by="key", left_on="ts", right_on="rt",
-                  tolerance_seconds=4)
-    outs = {
-        "plain": asof_join(ldf, rdf, **kwargs),
-        "bucketed": asof_join_bucketed(ldf, rdf, bucket_seconds=7, **kwargs),
-        "broadcast": asof_join_broadcast(ldf, rdf, **kwargs),
-    }
+    out = asof_join(spark.createDataFrame(left), spark.createDataFrame(right),
+                    by="key", left_on="ts", right_on="rt",
+                    tolerance_seconds=4)
     exp = pd.merge_asof(left.sort_values("ts"), right.sort_values("rt"),
                         left_on="ts", right_on="rt", by="key",
                         tolerance=pd.Timedelta(seconds=4))
     exp = exp.sort_values("ev")["payload"].fillna(-1).tolist()
     assert exp == [7.0, -1, 7.0]  # 4.0s kept (inclusive), 4.9s nulled
-    for name, df in outs.items():
-        got = (df.toPandas().sort_values("ev")["payload"]
-               .fillna(-1).tolist())
-        assert got == exp, name
+    got = out.toPandas().sort_values("ev")["payload"].fillna(-1).tolist()
+    assert got == exp
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_asof_join_null_and_missing_keys_match_pandas(spark, direction):
+    """A NULL by-key matches right rows with a NULL key (as in pandas;
+    DuckDB's ASOF LEFT JOIN leaves it unmatched), and a key absent from
+    the right side comes back unmatched."""
+    left = pd.DataFrame({
+        "key": [None, "a", None, "b", "a"],
+        "ts": [_ts(20), _ts(15), _ts(40), _ts(30), _ts(50)],
+        "ev": np.arange(5, dtype=np.int64),
+    })
+    right = pd.DataFrame({
+        "key": ["a", None, "a", None],
+        "rt": [_ts(10), _ts(5), _ts(45), _ts(60)],
+        "payload": np.array([1, 2, 3, 4], dtype=np.int64),
+    })
+    ldf = spark.createDataFrame(left, "key string, ts timestamp, ev long")
+    rdf = spark.createDataFrame(right, "key string, rt timestamp, payload long")
+    got = (asof_join(ldf, rdf, by="key", left_on="ts", right_on="rt",
+                     direction=direction)
+           .toPandas().sort_values("ev").reset_index(drop=True))
+    exp = pd.merge_asof(
+        left.sort_values("ts"), right.sort_values("rt"),
+        left_on="ts", right_on="rt", by="key", direction=direction,
+    ).sort_values("ev").reset_index(drop=True)
+    assert list(got["payload"].fillna(-1)) == list(exp["payload"].fillna(-1))
+    pd.testing.assert_series_equal(got["matched_rt"], exp["rt"],
+                                   check_names=False, check_dtype=False)
+    null_rows = exp[exp["key"].isna()]["payload"].tolist()
+    assert null_rows == ([2, 2] if direction == "backward" else [4, 4])
